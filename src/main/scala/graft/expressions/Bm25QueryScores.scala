@@ -70,17 +70,25 @@ case class Bm25QueryScores(
 
   // immutable-Map lookups box and hash per probe through the Scala
   // wrapper; one java.util.HashMap per executor keeps the token loop
-  // allocation-free on the probe side (the DsirGramScore pattern)
+  // allocation-free on the probe side (the DsirGramScore pattern).
+  // Each entry carries its slot in `entries`, so a row's tf counts are
+  // plain ints over slots, not a per-row map of boxed counts.
   @transient private lazy val table
       : java.util.HashMap[String, Bm25QueryScores.Entry] = {
     val m = new java.util.HashMap[String, Bm25QueryScores.Entry](
       terms.size * 2)
-    terms.foreach { case (t, (df, mask)) =>
+    terms.iterator.zipWithIndex.foreach { case ((t, (df, mask)), slot) =>
       val dfD = df.toDouble
       m.put(t, new Bm25QueryScores.Entry(
-        dfD, mask, (nDocs.toDouble - dfD + 0.5) / (dfD + 0.5)))
+        dfD, mask, (nDocs.toDouble - dfD + 0.5) / (dfD + 0.5), slot))
     }
     m
+  }
+
+  @transient private lazy val entries: Array[Bm25QueryScores.Entry] = {
+    val a = new Array[Bm25QueryScores.Entry](table.size)
+    table.values.forEach(e => a(e.slot) = e)
+    a
   }
 
   def compute(text: UTF8String): GenericArrayData = {
@@ -92,24 +100,29 @@ case class Bm25QueryScores(
     // hoisted out of the term loop
     val denomBase = k1 * ((1.0 - b) + (b * dlD) / avgdl)
     val k1p1 = k1 + 1.0
-    // tf per matched term (terms outside every query contribute to no
-    // score and are never counted)
-    val counts = new java.util.HashMap[String, java.lang.Integer]()
+    // the entry slot of every token that is a query term (terms outside
+    // every query contribute to no score and are never counted), one
+    // table probe per token; sorted, equal slots form one run per
+    // distinct term and the run length is its tf
+    val hits = new Array[Int](ts.length)
+    var nHits = 0
     var i = 0
     while (i < ts.length) {
-      if (table.containsKey(ts(i))) {
-        val c = counts.get(ts(i))
-        counts.put(ts(i), if (c == null) 1 else c.intValue() + 1)
-      }
+      val e = table.get(ts(i))
+      if (e != null) { hits(nHits) = e.slot; nHits += 1 }
       i += 1
     }
+    java.util.Arrays.sort(hits, 0, nHits)
     val n = qIds.size
     val acc = new Array[java.math.BigDecimal](n)
-    val it = counts.entrySet().iterator()
-    while (it.hasNext) {
-      val en = it.next()
-      val e = table.get(en.getKey)
-      val tfD = en.getValue.toDouble
+    var j = 0
+    while (j < nHits) {
+      val slot = hits(j)
+      var end = j + 1
+      while (end < nHits && hits(end) == slot) end += 1
+      val e = entries(slot)
+      val tfD = (end - j).toDouble
+      j = end
       val term = e.idf * (tfD * k1p1) / (tfD + denomBase)
       // Spark's double→DECIMAL(38,12) Cast: shortest decimal
       // representation, HALF_UP at scale 12 (TokenBucketMargin)
@@ -152,6 +165,8 @@ object Bm25QueryScores {
     * `(N − df + 0.5)/(df + 0.5)` — a pure function of (N, df),
     * precomputed once per term at table build instead of once per
     * (doc, term) probe; same operands, same IEEE ops, same double.
+    * `slot` is the entry's index in the expression's entry array.
     */
-  final class Entry(val df: Double, val mask: Long, val idf: Double)
+  final class Entry(val df: Double, val mask: Long, val idf: Double,
+      val slot: Int)
 }

@@ -1068,6 +1068,42 @@ object Dedup {
   def stateBucket(key: Column, buckets: Int): Column =
     pmod(xxhash64(key), lit(buckets.toLong)).cast("int")
 
+  /** The bucket count a bucketed state directory was written with,
+    * recorded as a `_buckets` file holding B (a name Spark's file index
+    * skips: it starts with `_` and has no `=`, so reading the state
+    * root never takes it for data). The first [[appendBucketed]]
+    * records it (`record`); every later append and every probe must
+    * use the same B, so a run with a different
+    * `SPARK_GRAFT_S20_BUCKETS` against an existing state dir fails
+    * here instead of probing the wrong buckets and silently dropping
+    * candidates. A state dir holding buckets but no record is refused
+    * for the same reason.
+    */
+  private def checkBucketCount(dir: String, buckets: Int,
+      record: Boolean): Unit = {
+    val d = new java.io.File(dir)
+    val marker = new java.io.File(d, "_buckets")
+    if (marker.isFile) {
+      val recorded = new String(
+        java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").trim
+      require(recorded == buckets.toString,
+        s"bucketed state at $dir was written with $recorded buckets, " +
+          s"this run uses $buckets (SPARK_GRAFT_S20_BUCKETS): probing " +
+          "with another count drops candidates — re-bucket the state " +
+          "or run with the recorded count")
+    } else {
+      val hasBuckets = Option(d.list()).exists(_.exists(_.startsWith("bucket=")))
+      require(!hasBuckets,
+        s"bucketed state at $dir has bucket dirs but no _buckets record")
+      if (record) {
+        d.mkdirs()
+        java.nio.file.Files.write(marker.toPath,
+          s"$buckets\n".getBytes("UTF-8"))
+        ()
+      }
+    }
+  }
+
   /** Append rows into the `keyCol`-bucketed standing state at `dir`
     * (layout: `bucket=<k>/part-*.parquet`). The repartition puts each
     * bucket's rows in one task so a batch appends at most one file per
@@ -1076,6 +1112,7 @@ object Dedup {
     */
   def appendBucketed(df: DataFrame, dir: String, keyCol: String,
       buckets: Int = indexBuckets): Unit = {
+    checkBucketCount(dir, buckets, record = true)
     if (buckets == 1)
       // single-bucket fast path: same bucket=0/ layout, none of the
       // dynamic-partition write machinery (every key hashes to 0)
@@ -1109,6 +1146,7 @@ object Dedup {
       probeKeys: DataFrame,
       emptyLike: DataFrame,
       buckets: Int = indexBuckets): DataFrame = {
+    checkBucketCount(dir, buckets, record = false)
     val key = col(probeKeys.columns.head)
     val bks: Seq[Int] =
       if (buckets == 1) Seq(0) // every key hashes to 0: no probe job

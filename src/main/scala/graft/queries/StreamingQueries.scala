@@ -22,50 +22,52 @@ object StreamingQueries extends QueryGroup {
 
   private val counter = new java.util.concurrent.atomic.AtomicLong()
 
-  /** The events table as either a file STREAM (the run paths) or the
-    * SAME files as a batch leaf (the plan audit): identical explicit
-    * schema, glob, and ts normalization, so both modes plan the
-    * identical lineage above the leaf. The streaming source needs an
-    * explicit schema, so peek at the batch-read schema of the same
-    * file — exactly what the vectorized reader will produce (long for
-    * legacy TIMESTAMP(NANOS) under nanosAsLong, TIMESTAMP_NTZ for
-    * timestamp[us]) — then normalize post-read. The batch leaf exists
-    * because Spark's batch planner cannot force `executedPlan` through
-    * a watermarked `StreamingRelation` (`EventTimeWatermarkStrategy`
-    * MatchErrors — r10 verdict #1); over a batch leaf the physical
-    * plan is real and every join-strategy/limit check means what it
-    * says.
+  /** Table `name` of `dir` as either a file STREAM (the run paths) or
+    * the SAME files as a batch leaf (the plan audit): identical
+    * explicit schema and glob, so both modes plan the identical lineage
+    * above the leaf. The streaming file source requires a directory and
+    * an explicit schema: it streams the sf dir with a glob selecting
+    * just the table, under the table's resolved schema from [[Tables]]
+    * (its session-cached batch read — exactly what the vectorized
+    * reader will produce). The batch leaf exists because Spark's batch
+    * planner cannot force `executedPlan` through a watermarked
+    * `StreamingRelation` (`EventTimeWatermarkStrategy` MatchErrors —
+    * r10 verdict #1); over a batch leaf the physical plan is real and
+    * every join-strategy/limit check means what it says.
     */
-  private def eventsSource(
-      s: org.apache.spark.sql.SparkSession, dir: String, stream: Boolean) = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val physicalSchema = s.read.parquet(s"$dir/events.parquet").schema
-    // the streaming file source requires a directory: stream the sf dir
-    // with a glob selecting just the events table
-    val raw =
-      if (stream)
-        s.readStream.schema(physicalSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-      else
-        s.read.schema(physicalSchema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir)
-    graft.Tables.normalizeTs(raw)
-  }
+  private def tableSource(s: SparkSession, dir: String, name: String,
+      schema: org.apache.spark.sql.types.StructType,
+      stream: Boolean): DataFrame =
+    if (stream)
+      s.readStream.schema(schema)
+        .option("pathGlobFilter", s"$name.parquet").parquet(dir)
+    else
+      s.read.schema(schema)
+        .option("pathGlobFilter", s"$name.parquet").parquet(dir)
+
+  /** The events table as a [[tableSource]]: streamed under its physical
+    * schema (long for legacy TIMESTAMP(NANOS), TIMESTAMP_NTZ for
+    * timestamp[us]), then ts-normalized post-read exactly as
+    * `Tables.events` does.
+    */
+  private def eventsSource(s: SparkSession, dir: String, stream: Boolean) =
+    Tables.normalizeTs(tableSource(s, dir, "events",
+      Tables(s, dir).eventsPhysical.schema, stream))
+
+  /** Embeddings as a [[tableSource]] under the table's own schema. */
+  private def embeddingsSource(
+      s: SparkSession, dir: String, stream: Boolean): DataFrame =
+    tableSource(s, dir, "embeddings", Tables(s, dir).embeddings.schema, stream)
 
   /** Documents as a stream (run; the shared source of every
     * batch-model → streaming-apply gate, s16/s19/s21/s23/s26/s27/s28)
     * or the same files as a batch leaf (plan audit) — see
-    * [[eventsSource]] for why both modes exist. */
+    * [[tableSource]] for why both modes exist. */
   private def docsSource(
-      s: SparkSession, dir: String, stream: Boolean): DataFrame = {
-    val reader = "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"
-    if (stream)
-      s.readStream.schema(reader)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    else
-      s.read.schema(reader)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-  }
+      s: SparkSession, dir: String, stream: Boolean): DataFrame =
+    tableSource(s, dir, "documents", org.apache.spark.sql.types.StructType
+      .fromDDL("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"),
+      stream)
 
   /** Runs the streaming frame to a memory sink (AvailableNow) and
     * returns the sink table. CONTRACT for update-mode callers: the
@@ -108,39 +110,56 @@ object StreamingQueries extends QueryGroup {
     spark.table(name)
   }
 
-  /** Stage the deterministic arrival slices of a staged-source query
-    * in ONE source pass (r18, guide §2.4: the per-slice filter loop
-    * re-scanned the source once per slice, plus once more for any
-    * bound aggregate): rows are routed by `sliceCol` into `k=<n>/`
-    * partition dirs; the repartition puts each slice in one task so
-    * each slice stays a single file, and the slice column never enters
-    * the data files, so the staged schema is unchanged. Slice
-    * MEMBERSHIP is unchanged too — `sliceCol` is each site's old
+  /** Stage the deterministic arrival slices `0 until slices` of a
+    * staged-source query in ONE source pass (r18, guide §2.4: the
+    * per-slice filter loop re-scanned the source once per slice, plus
+    * once more for any bound aggregate): rows are routed by `sliceCol`
+    * into `k=<n>/` partition dirs; the repartition puts each slice in
+    * one task so each slice stays a single file, and the slice column
+    * never enters the data files, so the staged schema is unchanged.
+    * Slice MEMBERSHIP is unchanged too — `sliceCol` is each site's old
     * filter predicate solved for k — and within-slice row order is
     * free at every site (set-oriented batches or handlers that sort
     * in-batch; see each site's contract note).
+    *
+    * Batch cadence is pinned as well: an empty slice gets one empty
+    * parquet file (schema only), as the old per-slice writer produced,
+    * so [[feedSlice]] fires exactly one micro-batch per slice and
+    * per-batch side effects (s22's snapshot `version` counter) see the
+    * same batch sequence whether or not a slice has rows.
     */
-  private def stageSlices(df: DataFrame,
-      sliceCol: org.apache.spark.sql.Column, stage: java.io.File): Unit = {
+  private[graft] def stageSlices(df: DataFrame,
+      sliceCol: org.apache.spark.sql.Column, slices: Int,
+      stage: java.io.File): Unit = {
     df.withColumn("k", sliceCol.cast("int"))
       .repartition(col("k"))
       .write.mode("overwrite").partitionBy("k")
       .parquet(stage.getAbsolutePath)
-    ()
+    (0 until slices).map(k => new java.io.File(stage, s"k=$k"))
+      .filterNot(_.isDirectory).foreach { d =>
+        df.sparkSession
+          .createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            df.schema)
+          .write.parquet(d.getAbsolutePath)
+      }
   }
 
-  /** Copy slice k's staged files into the live source dir. An empty
-    * slice stages NO directory — it feeds no batch, which emits
-    * nothing, exactly what the per-slice writer's empty file produced.
+  /** Copy slice k's staged files into the live source dir: one batch
+    * per slice, empty slices included (see [[stageSlices]]). A slice
+    * that was never staged fails here rather than silently skipping a
+    * batch.
     */
-  private def feedSlice(stage: java.io.File, in: java.io.File, k: Int): Unit =
-    Option(new java.io.File(stage, s"k=$k").listFiles())
+  private[graft] def feedSlice(stage: java.io.File, in: java.io.File, k: Int): Unit = {
+    val files = Option(new java.io.File(stage, s"k=$k").listFiles())
       .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.endsWith(".parquet")).foreach { f =>
-        java.nio.file.Files.copy(f.toPath,
-          new java.io.File(in, s"b$k-${f.getName}").toPath)
-        ()
-      }
+      .filter(_.getName.endsWith(".parquet"))
+    require(files.nonEmpty, s"feedSlice: slice k=$k of $stage was never staged")
+    files.foreach { f =>
+      java.nio.file.Files.copy(f.toPath,
+        new java.io.File(in, s"b$k-${f.getName}").toPath)
+      ()
+    }
+  }
 
   /** Pre-sink streaming frames (and, for the foreachBatch queries,
     * batch-shaped interior frames built through the SAME shared
@@ -400,14 +419,7 @@ object StreamingQueries extends QueryGroup {
 
     def s24(s: SparkSession, dir: String, stream: Boolean = true): DataFrame = {
       val evalSet = Tables(s, dir).embeddings.filter(col("vec_id") < 100)
-      val physicalSchema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val raw =
-        if (stream)
-          s.readStream.schema(physicalSchema)
-            .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        else
-          s.read.schema(physicalSchema)
-            .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+      val raw = embeddingsSource(s, dir, stream)
       val corpus = raw.filter(col("vec_id") >= 100)
       graft.operators.Decontamination
         .flagContaminatedEmbedding(corpus, evalSet, threshold = 0.2)
@@ -445,14 +457,8 @@ object StreamingQueries extends QueryGroup {
     }
 
     def s26(s: SparkSession, dir: String, stream: Boolean = true): DataFrame = {
-      val physicalSchema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docs =
-        if (stream)
-          s.readStream.schema(physicalSchema)
-            .option("pathGlobFilter", "documents.parquet").parquet(dir)
-        else
-          s.read.schema(physicalSchema)
-            .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docs = tableSource(s, dir, "documents",
+        Tables(s, dir).documents.schema, stream)
       graft.operators.Objectives.sftGate(docs)
     }
 
@@ -535,14 +541,7 @@ object StreamingQueries extends QueryGroup {
       * (the s33 pattern, embedding-space edition).
       */
     def s36(s: SparkSession, dir: String, stream: Boolean = true): DataFrame = {
-      val physicalSchema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val raw =
-        if (stream)
-          s.readStream.schema(physicalSchema)
-            .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        else
-          s.read.schema(physicalSchema)
-            .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+      val raw = embeddingsSource(s, dir, stream)
       // the codebook comes from the STATIC table (deriving it from the
       // stream would be a stream-stream join): the s19/s21 batch-model
       // → streaming-apply shape, with the model being 16 centroids
@@ -652,14 +651,7 @@ object StreamingQueries extends QueryGroup {
       * downstream pruning (n133) trusts.
       */
     def s40(s: SparkSession, dir: String, stream: Boolean = true): DataFrame = {
-      val physicalSchema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val raw =
-        if (stream)
-          s.readStream.schema(physicalSchema)
-            .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        else
-          s.read.schema(physicalSchema)
-            .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+      val raw = embeddingsSource(s, dir, stream)
       val protos =
         graft.operators.Geometry.labelPrototypes(Tables(s, dir).embeddings)
       raw.join(broadcast(protos), "label")
@@ -727,14 +719,7 @@ object StreamingQueries extends QueryGroup {
       * geometry audit.
       */
     def s43(s: SparkSession, dir: String, stream: Boolean = true): DataFrame = {
-      val physicalSchema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val raw =
-        if (stream)
-          s.readStream.schema(physicalSchema)
-            .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        else
-          s.read.schema(physicalSchema)
-            .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+      val raw = embeddingsSource(s, dir, stream)
       graft.operators.Geometry.anisotropyMoments(raw)
     }
 
@@ -1664,7 +1649,7 @@ object StreamingQueries extends QueryGroup {
         // deterministic arrival slices: batch k = doc_id ≡ k (mod 3),
         // staged in one corpus pass (admission is set-oriented per
         // batch, so within-slice row order is free)
-        stageSlices(docs, pmod(col("doc_id"), lit(3)), stage)
+        stageSlices(docs, pmod(col("doc_id"), lit(3)), 3, stage)
         // the shingle state starts empty WITH the right schema; the
         // band index needs no anchor write since r18 — it is hash-
         // BUCKETED by band_key (r17 verdict task 1; layout
@@ -1896,7 +1881,7 @@ object StreamingQueries extends QueryGroup {
         // one pass (changeset application is keyed per batch, so
         // within-slice row order is free)
         val changes = NorthStar4.mergeChangeset(docs)
-        stageSlices(changes, pmod(col("doc_id"), lit(3)), stage)
+        stageSlices(changes, pmod(col("doc_id"), lit(3)), 3, stage)
         var version = 0
         val apply = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
             _: Long) => {
@@ -2051,7 +2036,7 @@ object StreamingQueries extends QueryGroup {
         // one staging pass; slice k = doc_id div cut — the old range
         // filter solved for k (the quota handler sorts by id in-batch,
         // so within-slice row order is free)
-        stageSlices(docs, expr(s"doc_id div ${cut}L"), stage)
+        stageSlices(docs, expr(s"doc_id div ${cut}L"), 3, stage)
         val out = Frames.s25Quota(s, s.readStream
           .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
           .option("pathGlobFilter", "*.parquet")
@@ -2268,7 +2253,7 @@ object StreamingQueries extends QueryGroup {
         // range filter solved for k (the CUSUM handler sorts by
         // (tsm, event_id) in-batch, so within-slice row order is free)
         stageSlices(ev,
-          expr(s"(unix_micros(ts) - ${lo}L) div ${cut}L"), stage)
+          expr(s"(unix_micros(ts) - ${lo}L) div ${cut}L"), 3, stage)
         val schema = s.read
           .parquet(new java.io.File(stage, "k=0").getAbsolutePath).schema
         val out = Frames.s31Path(s,

@@ -448,12 +448,11 @@ object ScaleProbe {
     // measured stream). user_id AND event_id shift per copy, so each
     // copy is a fresh population — join/agg STATE grows with input,
     // which is exactly the scaling question for stateful streams.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // normalize ts BEFORE staging: the replicated copies are re-written
-    // by Spark, so they carry a plain TimestampType regardless of the
-    // driver data's physical generation (nanos-long vs timestamp[us])
-    lazy val eventsRaw =
-      graft.Tables.normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
+    // normalize ts BEFORE staging (`Tables.events`): the replicated
+    // copies are re-written by Spark, so they carry a plain TimestampType
+    // regardless of the driver data's physical generation (nanos-long vs
+    // timestamp[us])
+    lazy val eventsRaw = t.events
     lazy val evSteps: (Long, Long) = {
       val r = eventsRaw
         .agg(max(col("user_id")), max(col("event_id"))).head

@@ -86,4 +86,31 @@ class BucketedStateSpec extends AnyFunSuite {
     assert(got.columns.toSeq == Seq("doc_id", "band_key"))
     assert(got.count() == 0)
   }
+
+  test("a bucket count other than the recorded one fails loudly") {
+    val dir = tmp()
+    val state = (0L until 40L)
+      .map(i => (i, s"key-$i")).toDF("doc_id", "band_key")
+    D.appendBucketed(state, dir, "band_key", buckets = 4)
+    val marker = new java.io.File(dir, "_buckets")
+    assert(new String(java.nio.file.Files.readAllBytes(marker.toPath)).trim == "4")
+    val probe = Seq("key-3").toDF("band_key")
+    val empty = state.filter(lit(false))
+    val onAppend = intercept[IllegalArgumentException](
+      D.appendBucketed(state, dir, "band_key", buckets = 8))
+    assert(onAppend.getMessage.contains("written with 4 buckets"))
+    val onProbe = intercept[IllegalArgumentException](
+      D.readProbedBuckets(spark, dir, probe, empty, buckets = 1))
+    assert(onProbe.getMessage.contains("this run uses 1"))
+    // the matching count still appends and probes, and the state root
+    // reads as data only (the record is not a data file)
+    D.appendBucketed(state, dir, "band_key", buckets = 4)
+    assert(D.readProbedBuckets(spark, dir, probe, empty, buckets = 4)
+      .filter(col("band_key") === "key-3").count() == 2)
+    assert(spark.read.parquet(dir).count() == 80)
+    // buckets with no record cannot be checked, so they are refused
+    marker.delete()
+    intercept[IllegalArgumentException](
+      D.readProbedBuckets(spark, dir, probe, empty, buckets = 4))
+  }
 }

@@ -242,4 +242,38 @@ class StreamingSpec extends AnyFunSuite {
     assert(want.nonEmpty && want.forall(_(4) != null),
       "fixture check: both slices populated for every type")
   }
+
+  test("staged arrival slices fire one micro-batch per slice, empty slices included") {
+    // batch cadence is a semantic: per-batch side effects (s22 writes
+    // one snapshot version per batch) must see every slice, so an
+    // empty slice still fires a zero-row batch
+    val base = java.nio.file.Files.createTempDirectory("graft_slices_").toFile
+    base.deleteOnExit()
+    val stage = new java.io.File(base, "stage")
+    val in = new java.io.File(base, "in")
+    in.mkdirs()
+    val df = spark.range(0, 10).toDF("id")
+    // slice 1 gets no rows
+    queries.StreamingQueries.stageSlices(df,
+      when(col("id") < 5, lit(0)).otherwise(lit(2)), 3, stage)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    val record = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+        id: Long) => { seen.add((id, batch.count())); () }
+    val q = spark.readStream.schema("id LONG").parquet(in.getAbsolutePath)
+      .writeStream
+      .option("checkpointLocation", new java.io.File(base, "ckpt").getAbsolutePath)
+      .foreachBatch(record)
+      .start()
+    try {
+      (0 until 3).foreach { k =>
+        queries.StreamingQueries.feedSlice(stage, in, k)
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toList == List((0L, 5L), (1L, 0L), (2L, 5L)))
+    val e = intercept[IllegalArgumentException](
+      queries.StreamingQueries.feedSlice(stage, in, 3))
+    assert(e.getMessage.contains("k=3"))
+  }
 }
