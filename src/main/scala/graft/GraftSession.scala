@@ -29,27 +29,26 @@ object GraftSession {
       // codegen source-text LRU: Spark's default 100 entries thrashes
       // under this engine's workload — one CC query alone compiles
       // ~130 distinct stage sources, so EVERY execution recompiled
-      // ~everything (CcCodegen receipts, docs/PLANS.md r17: n58
-      // 129/129/130 Janino compiles across back-to-back runs at 100;
+      // ~everything (docs/PLANS.md "Round 17: CC codegen-cache fix":
+      // n58 129/129/130 Janino compiles across back-to-back runs at 100;
       // 96/0/4 at 4096 — the sources repeat, the cache was just too
       // small). 4096 holds the full sweep's working set; the cost is
       // retained generated-class metadata (~tens of KB each), nothing
       // next to the 5–7 s/run of concurrent JIT the misses burned.
       // Same lever per executor JVM on a cluster.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // drop the per-plan stage id from generated class names
       // (default true, debugging aid only — SPARK-23032): with the id
       // baked in, two textually identical stages at different plan
       // positions can NEVER share a codegen-cache entry, so every CC
       // round / repeated pipeline fragment recompiled per position.
-      // CcCodegen receipts (docs/PLANS.md r18): n58 first-touch Janino
-      // compiles 146 → 130 and first-touch wall 25.3 → 20.0 s in the
-      // same regime; back-to-back re-execution compiles 4 → 0 (the
+      // docs/PLANS.md "Round 18: CC codegen class-name sharing": n58
+      // first-touch Janino compiles 146 → 130 and first-touch wall
+      // 25.3 → 20.0 s in the same regime; back-to-back re-execution
+      // compiles 4 → 0 (the
       // residual misses were positional aliases of cached stages).
       // Per-JVM, transfers to executor JVMs unchanged.
-      .config("spark.sql.codegen.useIdInClassName",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_ID_IN_NAME", "false"))
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     installOptimizations(spark)

@@ -6,11 +6,19 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated query names] — the
-    // optional filter is builder-side only (targeted local re-checks);
-    // the driver always passes two args and gets the full dump
+    // optional filter serves targeted local re-checks (oracle_sql.json
+    // stays complete, so tools/check.py can replay any subset); the
+    // two-argument call gets the full dump. A filter naming an
+    // unregistered query fails before any work: a typo must not
+    // silently shrink the dump.
     val sfDir = args(0); val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    only.foreach { names =>
+      val unknown = names -- SparkEntry.queries.keySet
+      require(unknown.isEmpty,
+        s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -23,6 +23,11 @@ import org.apache.spark.sql.functions._
   */
 object Retrieval {
 
+  /** The most distinct query terms [[bm25MoreLikeThis]] embeds in a
+    * plan; above it the query set falls back to [[bm25ExplodedJoin]].
+    */
+  val MaxQueryVocab: Int = 100000
+
   /** Query-by-document BM25 ("more like this"): each document with
     * `doc_id < nQueries` becomes a query (its DISTINCT tokens are the
     * query terms), every other document is scored
@@ -55,9 +60,13 @@ object Retrieval {
     * Scale shape: model build is query-bounded (guarded collect);
     * scoring is scan-stage over the corpus; the final top-k is a
     * window partitioned BY QUERY. The expression supports ≤ 64 queries
-    * per pass (one bitmask word); larger query sets take the exploded
-    * inverted-index path ([[bm25ExplodedJoin]]), whose per-query cost
-    * is posting-list-bounded.
+    * per pass (one bitmask word), and the query vocabulary rides the
+    * plan (an InSet scan filter plus the expression's term map,
+    * serialized per task), so it is capped at [[MaxQueryVocab]]
+    * distinct terms. Larger query sets or vocabularies take the
+    * exploded inverted-index path ([[bm25ExplodedJoin]]), whose
+    * per-query cost is posting-list-bounded and whose query terms are
+    * a broadcast join side, not plan literals.
     *
     * Output: (q_id, rank, doc_id, score).
     */
@@ -87,6 +96,9 @@ object Retrieval {
         lit(1).cast("int").as("rank"), col("doc_id"),
         lit(0.0).as("score")).filter(lit(false))
     }
+    val qvocab = qtRows.map(_.getString(1)).distinct.toSeq
+    if (qvocab.size > MaxQueryVocab)
+      return bm25ExplodedJoin(docs, nQueries, k, k1, b)
     // corpus stats over docs with ≥ 1 token row (text non-null): the
     // same population the tf-based dl table counted
     val statsRow = docs.filter(col("text").isNotNull)
@@ -97,7 +109,6 @@ object Retrieval {
     val avgdl = statsRow.getLong(1).toDouble / nDocs.toDouble
     // corpus df of the query terms only: one scan, query-vocab-bounded
     // aggregation (the InSet filter runs inside the scan stage)
-    val qvocab = qtRows.map(_.getString(1)).distinct.toSeq
     val dfMap = DriverModel.collectBounded(
       docs.filter(col("text").isNotNull)
         .select(explode(toks).as("t"))

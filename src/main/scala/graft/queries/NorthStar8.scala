@@ -14,11 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object NorthStar8 extends QueryGroup {
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(); ()
-  }
-
   /** Versioned model artifact roundtrip — train → write v1 and v2 to a
     * partitioned parquet store → load the LATEST back with a FRESH
     * disk read (no lineage to the training frames) → apply. v1 is
@@ -31,30 +26,27 @@ object NorthStar8 extends QueryGroup {
   private val artifactLifecycle = Q(
     "n115_artifact_lifecycle",
     "versioned model artifact roundtrip: train v1/v2 winsorize bounds, write to disk, load LATEST, clip-report",
-    (s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_n115_").toFile
-      try {
-        val art = new java.io.File(base, "bounds").getAbsolutePath
-        val ev = Tables(s, dir).events
-        def bounds(df: DataFrame) = graft.operators.Drift
-          .winsorizeBounds(df, "event_type", "value")
-          .select("event_type", "lo_bound", "hi_bound")
-        graft.operators.ModelArtifacts.writeVersion(
-          bounds(ev.filter(col("event_id") % 2 === 0)), art, 1)
-        graft.operators.ModelArtifacts.writeVersion(bounds(ev), art, 2)
-        val model = graft.operators.ModelArtifacts.loadLatest(s, art)
-        ev.select(col("event_type"), col("value").as("v"))
-          .join(broadcast(model), Seq("event_type"), "left")
-          .groupBy(col("event_type"), col("version"),
-            col("lo_bound"), col("hi_bound"))
-          .agg(count(lit(1)).as("n_seen"),
-            sum(when(col("v") < col("lo_bound"), 1L).otherwise(0L))
-              .as("n_below"),
-            sum(when(col("v") > col("hi_bound"), 1L).otherwise(0L))
-              .as("n_above"))
-          .orderBy("event_type")
-          .localCheckpoint()
-      } finally rmTree(base)
+    (s, dir) => graft.Scratch.withDir("graft_n115_") { base =>
+      val art = new java.io.File(base, "bounds").getAbsolutePath
+      val ev = Tables(s, dir).events
+      def bounds(df: DataFrame) = graft.operators.Drift
+        .winsorizeBounds(df, "event_type", "value")
+        .select("event_type", "lo_bound", "hi_bound")
+      graft.operators.ModelArtifacts.writeVersion(
+        bounds(ev.filter(col("event_id") % 2 === 0)), art, 1)
+      graft.operators.ModelArtifacts.writeVersion(bounds(ev), art, 2)
+      val model = graft.operators.ModelArtifacts.loadLatest(s, art)
+      ev.select(col("event_type"), col("value").as("v"))
+        .join(broadcast(model), Seq("event_type"), "left")
+        .groupBy(col("event_type"), col("version"),
+          col("lo_bound"), col("hi_bound"))
+        .agg(count(lit(1)).as("n_seen"),
+          sum(when(col("v") < col("lo_bound"), 1L).otherwise(0L))
+            .as("n_below"),
+          sum(when(col("v") > col("hi_bound"), 1L).otherwise(0L))
+            .as("n_above"))
+        .orderBy("event_type")
+        .localCheckpoint()
     },
     Some("""WITH r AS (
               SELECT event_type, value AS v,
@@ -387,37 +379,34 @@ object NorthStar8 extends QueryGroup {
   private val shadowEval = Q(
     "n121_model_shadow_eval",
     "shadow deployment: pinned v1 vs latest v2 bounds artifacts over the same feed, per-type clip disagreement",
-    (s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_n121_").toFile
-      try {
-        val art = new java.io.File(base, "bounds").getAbsolutePath
-        val ev = Tables(s, dir).events
-        def bounds(df: DataFrame) = graft.operators.Drift
-          .winsorizeBounds(df, "event_type", "value")
-          .select("event_type", "lo_bound", "hi_bound")
-        graft.operators.ModelArtifacts.writeVersion(
-          bounds(ev.filter(col("event_id") % 2 === 0)), art, 1)
-        graft.operators.ModelArtifacts.writeVersion(bounds(ev), art, 2)
-        val v1 = graft.operators.ModelArtifacts.loadVersion(s, art, 1)
-          .select(col("event_type"),
-            col("lo_bound").as("lo1"), col("hi_bound").as("hi1"))
-        val v2 = graft.operators.ModelArtifacts.loadLatest(s, art)
-          .select(col("event_type"),
-            col("lo_bound").as("lo2"), col("hi_bound").as("hi2"))
-        ev.select(col("event_type"), col("value").as("v"))
-          .join(broadcast(v1), "event_type")
-          .join(broadcast(v2), "event_type")
-          .withColumn("out1", col("v") < col("lo1") || col("v") > col("hi1"))
-          .withColumn("out2", col("v") < col("lo2") || col("v") > col("hi2"))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("out1"), 1L).otherwise(0L)).as("v1_out"),
-            sum(when(col("out2"), 1L).otherwise(0L)).as("v2_out"),
-            sum(when(col("out1") =!= col("out2"), 1L).otherwise(0L))
-              .as("n_disagree"))
-          .orderBy("event_type")
-          .localCheckpoint()
-      } finally rmTree(base)
+    (s, dir) => graft.Scratch.withDir("graft_n121_") { base =>
+      val art = new java.io.File(base, "bounds").getAbsolutePath
+      val ev = Tables(s, dir).events
+      def bounds(df: DataFrame) = graft.operators.Drift
+        .winsorizeBounds(df, "event_type", "value")
+        .select("event_type", "lo_bound", "hi_bound")
+      graft.operators.ModelArtifacts.writeVersion(
+        bounds(ev.filter(col("event_id") % 2 === 0)), art, 1)
+      graft.operators.ModelArtifacts.writeVersion(bounds(ev), art, 2)
+      val v1 = graft.operators.ModelArtifacts.loadVersion(s, art, 1)
+        .select(col("event_type"),
+          col("lo_bound").as("lo1"), col("hi_bound").as("hi1"))
+      val v2 = graft.operators.ModelArtifacts.loadLatest(s, art)
+        .select(col("event_type"),
+          col("lo_bound").as("lo2"), col("hi_bound").as("hi2"))
+      ev.select(col("event_type"), col("value").as("v"))
+        .join(broadcast(v1), "event_type")
+        .join(broadcast(v2), "event_type")
+        .withColumn("out1", col("v") < col("lo1") || col("v") > col("hi1"))
+        .withColumn("out2", col("v") < col("lo2") || col("v") > col("hi2"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("out1"), 1L).otherwise(0L)).as("v1_out"),
+          sum(when(col("out2"), 1L).otherwise(0L)).as("v2_out"),
+          sum(when(col("out1") =!= col("out2"), 1L).otherwise(0L))
+            .as("n_disagree"))
+        .orderBy("event_type")
+        .localCheckpoint()
     },
     Some(shadowOracleSql))
 
@@ -570,28 +559,25 @@ object NorthStar8 extends QueryGroup {
   private val tokenizerArtifact = Q(
     "n124_tokenizer_artifact",
     "versioned BPE-merges artifact: train once, write v1(2 merges)/v2(3), load LATEST, segment the corpus",
-    (s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_n124_").toFile
-      try {
-        val art = new java.io.File(base, "merges").getAbsolutePath
-        val T = graft.operators.Tokenizer
-        val docs = Tables(s, dir).documents
-        val m3 = T.bpeTrainMerges(docs, 3)
-        graft.operators.ModelArtifacts.writeVersion(
-          m3.filter(col("round") <= 2), art, 1)
-        graft.operators.ModelArtifacts.writeVersion(m3, art, 2)
-        val loaded = graft.operators.ModelArtifacts.loadLatest(s, art)
-          .orderBy("round").select("lhs", "rhs", "version").collect()
-        val merges = loaded.map(r => (r.getString(0), r.getString(1))).toSeq
-        // merges are plan literals after the collect: the returned plan
-        // has no lineage onto the artifact store, so no checkpoint is
-        // needed before the temp tree is deleted
-        T.segmentationStatsWith(docs, merges)
-          .withColumn("version", lit(loaded.head.getInt(2)))
-          .select("source", "version", "n_words", "n_symbols",
-            "symbols_per_word")
-          .orderBy("source")
-      } finally rmTree(base)
+    (s, dir) => graft.Scratch.withDir("graft_n124_") { base =>
+      val art = new java.io.File(base, "merges").getAbsolutePath
+      val T = graft.operators.Tokenizer
+      val docs = Tables(s, dir).documents
+      val m3 = T.bpeTrainMerges(docs, 3)
+      graft.operators.ModelArtifacts.writeVersion(
+        m3.filter(col("round") <= 2), art, 1)
+      graft.operators.ModelArtifacts.writeVersion(m3, art, 2)
+      val loaded = graft.operators.ModelArtifacts.loadLatest(s, art)
+        .orderBy("round").select("lhs", "rhs", "version").collect()
+      val merges = loaded.map(r => (r.getString(0), r.getString(1))).toSeq
+      // merges are plan literals after the collect: the returned plan
+      // has no lineage onto the artifact store, so no checkpoint is
+      // needed before the temp tree is deleted
+      T.segmentationStatsWith(docs, merges)
+        .withColumn("version", lit(loaded.head.getInt(2)))
+        .select("source", "version", "n_words", "n_symbols",
+          "symbols_per_word")
+        .orderBy("source")
     },
     Some(s"""WITH v0 AS (
               SELECT COUNT(*) AS c,

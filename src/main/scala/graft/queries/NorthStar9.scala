@@ -14,11 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object NorthStar9 extends QueryGroup {
 
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(); ()
-  }
-
   /** Versioned-store retention: train and write v1 (quarter feed),
     * v2 (half feed), v3 (full feed) → prune to the newest TWO →
     * serve from the pruned store (pinned v2 + latest v3 — the n121
@@ -35,53 +30,50 @@ object NorthStar9 extends QueryGroup {
   private val retention = Q(
     "n127_artifact_retention",
     "versioned store retention: write v1/v2/v3, prune to newest 2, pinned-v2 + latest-v3 gates over the pruned store; pinned read of pruned v1 must fail loudly",
-    (s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_n127_").toFile
-      try {
-        val M = graft.operators.ModelArtifacts
-        val art = new java.io.File(base, "bounds").getAbsolutePath
-        val ev = Tables(s, dir).events
-        def bounds(df: DataFrame) = graft.operators.Drift
-          .winsorizeBounds(df, "event_type", "value")
-          .select("event_type", "lo_bound", "hi_bound")
-        M.writeVersion(bounds(ev.filter(col("event_id") % 4 === 0)), art, 1)
-        M.writeVersion(bounds(ev.filter(col("event_id") % 2 === 0)), art, 2)
-        M.writeVersion(bounds(ev), art, 3)
-        val pruned = M.pruneVersions(s, art, keepLatestK = 2)
-        require(pruned == Seq(1),
-          s"retention must drop exactly version 1, dropped: $pruned")
-        val left = M.listVersions(s, art)
-        require(left == Seq(2, 3),
-          s"store must hold exactly versions 2 and 3, holds: $left")
-        // the loud-failure contract, on the real pruned store: a pinned
-        // reader of the dropped version must throw, not read nothing
-        val failedLoudly =
-          try { M.loadVersion(s, art, 1); false }
-          catch { case _: IllegalArgumentException => true }
-        require(failedLoudly,
-          "pinned read of the pruned v1 must fail loudly")
-        val pinned = M.loadVersion(s, art, 2)
-          .select(col("event_type"),
-            col("lo_bound").as("lo2"), col("hi_bound").as("hi2"))
-        val latest = M.loadLatest(s, art)
-          .select(col("event_type"),
-            col("lo_bound").as("lo3"), col("hi_bound").as("hi3"))
-        ev.select(col("event_type"), col("value").as("v"))
-          .join(broadcast(pinned), "event_type")
-          .join(broadcast(latest), "event_type")
-          .withColumn("out2", col("v") < col("lo2") || col("v") > col("hi2"))
-          .withColumn("out3", col("v") < col("lo3") || col("v") > col("hi3"))
-          .groupBy("event_type")
-          .agg(count(lit(1)).as("n"),
-            sum(when(col("out2"), 1L).otherwise(0L)).as("pinned_out"),
-            sum(when(col("out3"), 1L).otherwise(0L)).as("latest_out"),
-            sum(when(col("out2") =!= col("out3"), 1L).otherwise(0L))
-              .as("n_disagree"))
-          .withColumn("n_versions_left", lit(left.size))
-          .withColumn("n_pruned", lit(pruned.size))
-          .orderBy("event_type")
-          .localCheckpoint()
-      } finally rmTree(base)
+    (s, dir) => graft.Scratch.withDir("graft_n127_") { base =>
+      val M = graft.operators.ModelArtifacts
+      val art = new java.io.File(base, "bounds").getAbsolutePath
+      val ev = Tables(s, dir).events
+      def bounds(df: DataFrame) = graft.operators.Drift
+        .winsorizeBounds(df, "event_type", "value")
+        .select("event_type", "lo_bound", "hi_bound")
+      M.writeVersion(bounds(ev.filter(col("event_id") % 4 === 0)), art, 1)
+      M.writeVersion(bounds(ev.filter(col("event_id") % 2 === 0)), art, 2)
+      M.writeVersion(bounds(ev), art, 3)
+      val pruned = M.pruneVersions(s, art, keepLatestK = 2)
+      require(pruned == Seq(1),
+        s"retention must drop exactly version 1, dropped: $pruned")
+      val left = M.listVersions(s, art)
+      require(left == Seq(2, 3),
+        s"store must hold exactly versions 2 and 3, holds: $left")
+      // the loud-failure contract, on the real pruned store: a pinned
+      // reader of the dropped version must throw, not read nothing
+      val failedLoudly =
+        try { M.loadVersion(s, art, 1); false }
+        catch { case _: IllegalArgumentException => true }
+      require(failedLoudly,
+        "pinned read of the pruned v1 must fail loudly")
+      val pinned = M.loadVersion(s, art, 2)
+        .select(col("event_type"),
+          col("lo_bound").as("lo2"), col("hi_bound").as("hi2"))
+      val latest = M.loadLatest(s, art)
+        .select(col("event_type"),
+          col("lo_bound").as("lo3"), col("hi_bound").as("hi3"))
+      ev.select(col("event_type"), col("value").as("v"))
+        .join(broadcast(pinned), "event_type")
+        .join(broadcast(latest), "event_type")
+        .withColumn("out2", col("v") < col("lo2") || col("v") > col("hi2"))
+        .withColumn("out3", col("v") < col("lo3") || col("v") > col("hi3"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("out2"), 1L).otherwise(0L)).as("pinned_out"),
+          sum(when(col("out3"), 1L).otherwise(0L)).as("latest_out"),
+          sum(when(col("out2") =!= col("out3"), 1L).otherwise(0L))
+            .as("n_disagree"))
+        .withColumn("n_versions_left", lit(left.size))
+        .withColumn("n_pruned", lit(pruned.size))
+        .orderBy("event_type")
+        .localCheckpoint()
     },
     Some("""WITH r2 AS (
               SELECT event_type, value AS v,

@@ -1,9 +1,9 @@
 package graft.queries
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Queries that execute REAL Structured Streaming (readStream → window
   * agg → memory sink, Trigger.AvailableNow) and return the materialized
@@ -80,34 +80,86 @@ object StreamingQueries extends QueryGroup {
     * per key (monotone counts → max per group — see s33) so the
     * result cannot depend on trigger slicing.
     */
-  private def runToTable(
+  private[graft] def runToTable(
       df: org.apache.spark.sql.DataFrame,
       mode: String,
       checkpointLocation: Option[String] = None): org.apache.spark.sql.DataFrame = {
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val spark = df.sparkSession
-    // Streaming state partitions are fixed at the FIRST run from
-    // spark.sql.shuffle.partitions and must be sized to the state, not
-    // to the batch-analytics core count: every micro-batch checkpoints
-    // each state-store partition, so a small-state stream on a 32-core
-    // session pays 4× the per-batch store overhead for nothing. 8 keys
-    // the overhead to the actual state size here; a real deployment
-    // sizes it to projected state bytes per partition.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(8, prevShuffle.toInt).toString)
-    try {
-      val writer = df.writeStream.outputMode(mode)
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow())
+    val q = withStatePartitions(df.sparkSession) {
+      val writer = memorySink(df, mode).trigger(Trigger.AvailableNow())
       val q = checkpointLocation
         .fold(writer)(c => writer.option("checkpointLocation", c))
         .start()
       q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      q
     }
-    spark.table(name)
+    df.sparkSession.table(q.name)
+  }
+
+  /** A memory-sink writer under a fresh `graft_stream_<n>` name — the
+    * started query's `name` is the sink table ([[GraftSession
+    * .dropAllBlocks]] reaps these between queries).
+    */
+  private def memorySink(df: DataFrame, mode: String): DataStreamWriter[Row] =
+    df.writeStream.outputMode(mode).format("memory")
+      .queryName(s"graft_stream_${counter.incrementAndGet()}")
+
+  /** Runs `body` under the streaming state-partition policy and then
+    * restores the session's value. Streaming state partitions are
+    * fixed at the FIRST run from spark.sql.shuffle.partitions and must
+    * be sized to the state, not to the batch-analytics core count:
+    * every micro-batch checkpoints each state-store partition, so a
+    * small-state stream on a 32-core session pays 4× the per-batch
+    * store overhead for nothing. min(8, session value) keys the
+    * overhead to the actual state size here; a real deployment sizes
+    * it to projected state bytes per partition (docs/PLANS.md
+    * "Streaming state-partition sizing").
+    */
+  private[graft] def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
+    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions",
+      math.min(8, prevShuffle.toInt).toString)
+    try body
+    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+  }
+
+  /** The staged-stream run (s20/s22/s25/s31): in one scratch dir and
+    * under the state-partition policy, `df` is staged as arrival
+    * slices `0 until slices` by `sliceCol` ([[stageSlices]]); `sink`
+    * gets the scratch dir and the file stream over its `in/` dir (read
+    * under `df`'s schema) and returns the writer, which starts with a
+    * checkpoint in the scratch dir; each slice is then fed
+    * ([[feedSlice]]) and processed as exactly ONE micro-batch. After
+    * the query stops, `result` gets the scratch dir and the stopped
+    * query (whose `name` is the memory-sink table, for
+    * [[memorySink]] writers) and must materialize its answer: the
+    * tree is removed when it returns.
+    */
+  private[graft] def runStaged[T](prefix: String, df: DataFrame,
+      sliceCol: Column, slices: Int)(
+      sink: (java.io.File, DataFrame) => DataStreamWriter[Row])(
+      result: (java.io.File, StreamingQuery) => T): T = {
+    val s = df.sparkSession
+    graft.Scratch.withDir(prefix) { base =>
+      withStatePartitions(s) {
+        val stage = new java.io.File(base, "stage")
+        val in = new java.io.File(base, "in"); in.mkdirs()
+        stageSlices(df, sliceCol, slices, stage)
+        val stream = s.readStream.schema(df.schema)
+          .option("pathGlobFilter", "*.parquet")
+          .parquet(in.getAbsolutePath)
+        val q = sink(base, stream)
+          .option("checkpointLocation",
+            new java.io.File(base, "ckpt").getAbsolutePath)
+          .start()
+        try {
+          (0 until slices).foreach { k =>
+            feedSlice(stage, in, k)
+            q.processAllAvailable()
+          }
+        } finally q.stop()
+        result(base, q)
+      }
+    }
   }
 
   /** Stage the deterministic arrival slices `0 until slices` of a
@@ -567,9 +619,7 @@ object StreamingQueries extends QueryGroup {
       import s.implicits._
       val models: DataFrame =
         if (stream) {
-          val base =
-            java.nio.file.Files.createTempDirectory("graft_s38_").toFile
-          val rows = try {
+          val rows = graft.Scratch.withDir("graft_s38_") { base =>
             val art = new java.io.File(base, "bounds").getAbsolutePath
             val ev = Tables(s, dir).events
             def bounds(df: DataFrame) = graft.operators.Drift
@@ -588,11 +638,6 @@ object StreamingQueries extends QueryGroup {
               .collect().toSeq
               .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2),
                 r.getDouble(3), r.getDouble(4)))
-          } finally {
-            def rm(f: java.io.File): Unit = {
-              Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-            }
-            rm(base)
           }
           rows.toDF("event_type", "lo1", "hi1", "lo2", "hi2")
         } else
@@ -800,9 +845,7 @@ object StreamingQueries extends QueryGroup {
       import s.implicits._
       val model: DataFrame =
         if (stream) {
-          val base =
-            java.nio.file.Files.createTempDirectory("graft_s34_").toFile
-          val rows = try {
+          val rows = graft.Scratch.withDir("graft_s34_") { base =>
             val art = new java.io.File(base, "len_gate").getAbsolutePath
             val docs = Tables(s, dir).documents
             def floors(d: DataFrame) = graft.operators.Drift
@@ -819,11 +862,6 @@ object StreamingQueries extends QueryGroup {
               .select("source", "thr_tok", "version")
               .collect().toSeq
               .map(r => (r.getString(0), r.getLong(1), r.getInt(2)))
-          } finally {
-            def rm(f: java.io.File): Unit = {
-              Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-            }
-            rm(base)
           }
           rows.toDF("source", "thr_tok", "version")
         } else
@@ -1488,9 +1526,12 @@ object StreamingQueries extends QueryGroup {
   private val streamCheckpointRecovery = Q(
     "s17_stream_checkpoint_recovery",
     "stop mid-stream, restart from checkpoint == one-shot batch aggregate",
-    (s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_s17_").toFile
-      base.deleteOnExit()
+    // the memory-sink table is driver-resident (independent of the
+    // files), so the staged parquet and checkpoint are dead weight once
+    // the restart finished — and the bench warm-up replays this query
+    // every run, so a failed phase must not leak a temp tree holding a
+    // full events copy either
+    (s, dir) => graft.Scratch.withDir("graft_s17_") { base =>
       val stage = new java.io.File(base, "stage")
       val in = new java.io.File(base, "in"); in.mkdirs()
       val ckpt = new java.io.File(base, "ckpt")
@@ -1513,23 +1554,11 @@ object StreamingQueries extends QueryGroup {
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value")),
         "complete",
         checkpointLocation = Some(ckpt.getAbsolutePath))
-      // the memory-sink table is driver-resident (independent of the
-      // files), so the staged parquet and checkpoint are dead weight
-      // once the restart finished — and the bench warm-up replays this
-      // query every run, so clean up in a finally (a failed phase must
-      // not leak a temp tree holding a full events copy: deleteOnExit
-      // is a no-op on non-empty directories)
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree))
-        f.delete(); ()
-      }
-      try {
-        copyIn(phase1)
-        runPhase() // consumes phase-1 files, commits offsets + state, stops
-        phase1.foreach(f => new java.io.File(in, f.getName).delete())
-        copyIn(phase2)
-        runPhase().orderBy("event_type") // phase-2 files + restored state
-      } finally rmTree(base)
+      copyIn(phase1)
+      runPhase() // consumes phase-1 files, commits offsets + state, stops
+      phase1.foreach(f => new java.io.File(in, f.getName).delete())
+      copyIn(phase2)
+      runPhase().orderBy("event_type") // phase-2 files + restored state
     },
     Some(s"""SELECT event_type, COUNT(*) AS n, ${oSum("value")} AS sum_value
              FROM events GROUP BY event_type ORDER BY event_type"""))
@@ -1630,26 +1659,16 @@ object StreamingQueries extends QueryGroup {
     "streaming MinHash+LSH near-dedup: per-batch admission vs an incremental band index",
     (s, dir) => {
       val D = graft.operators.Dedup
-      val base = java.nio.file.Files.createTempDirectory("graft_s20_").toFile
-      base.deleteOnExit()
-      def sub(n: String) = new java.io.File(base, n)
-      val in = sub("in"); in.mkdirs()
-      val stage = sub("stage")
-      val idxDir = sub("index").getAbsolutePath
-      val shDir = sub("shingles").getAbsolutePath
-      val outDir = sub("out").getAbsolutePath
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree))
-        f.delete(); ()
-      }
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val docs = Tables(s, dir).documents
-        // deterministic arrival slices: batch k = doc_id ≡ k (mod 3),
-        // staged in one corpus pass (admission is set-oriented per
-        // batch, so within-slice row order is free)
-        stageSlices(docs, pmod(col("doc_id"), lit(3)), 3, stage)
+      def sub(base: java.io.File, n: String) =
+        new java.io.File(base, n).getAbsolutePath
+      val docs = Tables(s, dir).documents
+      // deterministic arrival slices: batch k = doc_id ≡ k (mod 3),
+      // staged in one corpus pass (admission is set-oriented per
+      // batch, so within-slice row order is free)
+      runStaged("graft_s20_", docs, pmod(col("doc_id"), lit(3)), 3) { (base, in) =>
+        val idxDir = sub(base, "index")
+        val shDir = sub(base, "shingles")
+        val outDir = sub(base, "out")
         // the shingle state starts empty WITH the right schema; the
         // band index needs no anchor write since r18 — it is hash-
         // BUCKETED by band_key (r17 verdict task 1; layout
@@ -1704,27 +1723,11 @@ object StreamingQueries extends QueryGroup {
             bandsN.unpersist(); shN.unpersist(); batch.unpersist(); ()
           }
         }
-        val q = s.readStream
-          .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-          .parquet(in.getAbsolutePath)
-          .writeStream
-          .option("checkpointLocation", sub("ckpt").getAbsolutePath)
-          .foreachBatch(admit)
-          .start()
-        try {
-          (0 to 2).foreach { k =>
-            feedSlice(stage, in, k)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.read.parquet(outDir).orderBy("doc_id").localCheckpoint()
-      } finally {
-        // localCheckpoint has materialized the result, so the staged
-        // input + state trees are safe to drop — and dropping them in
-        // the finally (the s22 fix, applied to its sibling) means a
-        // failed run doesn't leak a temp tree holding corpus copies
-        rmTree(base)
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+        in.writeStream.foreachBatch(admit)
+      } { (base, _) =>
+        // materialized before the scratch tree (staged input + state)
+        // is removed
+        s.read.parquet(sub(base, "out")).orderBy("doc_id").localCheckpoint()
       }
     },
     Some("""WITH d AS (
@@ -1861,67 +1864,39 @@ object StreamingQueries extends QueryGroup {
     "s22_stream_snapshot_merge",
     "streaming CDC merge: per-batch snapshot versions converge to the one-shot merge",
     (s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_s22_").toFile
-      base.deleteOnExit()
-      def sub(n: String) = new java.io.File(base, n)
-      val in = sub("in"); in.mkdirs()
-      val stage = sub("stage")
-      def snapDir(v: Int) = new java.io.File(base, s"snap$v").getAbsolutePath
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree))
-        f.delete(); ()
-      }
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val docs = Tables(s, dir).documents
-        val baseSnap = docs.select(col("doc_id"), col("text"))
-        baseSnap.write.parquet(snapDir(0))
-        // deterministic arrival slices of the n69 changeset, staged in
-        // one pass (changeset application is keyed per batch, so
-        // within-slice row order is free)
-        val changes = NorthStar4.mergeChangeset(docs)
-        stageSlices(changes, pmod(col("doc_id"), lit(3)), 3, stage)
-        var version = 0
+      def snapDir(base: java.io.File, v: Int) =
+        new java.io.File(base, s"snap$v").getAbsolutePath
+      val docs = Tables(s, dir).documents
+      val baseSnap = docs.select(col("doc_id"), col("text"))
+      var version = 0
+      // deterministic arrival slices of the n69 changeset, staged in
+      // one pass (changeset application is keyed per batch, so
+      // within-slice row order is free)
+      runStaged("graft_s22_", NorthStar4.mergeChangeset(docs),
+          pmod(col("doc_id"), lit(3)), 3) { (base, in) =>
+        baseSnap.write.parquet(snapDir(base, 0))
         val apply = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
             _: Long) => {
           if (!batch.isEmpty) {
-            val cur = s.read.parquet(snapDir(version))
+            val cur = s.read.parquet(snapDir(base, version))
             // Frames.s22Apply is the SAME builder the plan audit
             // checks, so audit and execution cannot drift
             Frames.s22Apply(cur, batch)
-              .write.parquet(snapDir(version + 1))
+              .write.parquet(snapDir(base, version + 1))
             version += 1
           }
         }
-        val q = s.readStream
-          .schema("doc_id LONG, op STRING, text STRING")
-          .parquet(in.getAbsolutePath)
-          .writeStream
-          .option("checkpointLocation", sub("ckpt").getAbsolutePath)
-          .foreachBatch(apply)
-          .start()
-        try {
-          (0 to 2).foreach { k =>
-            feedSlice(stage, in, k)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        in.writeStream.foreachBatch(apply)
+      } { (base, _) =>
         // final snapshot classified against the original base — for
         // this changeset (upserts always change the text) the diff
         // labels coincide with n69's per-op provenance, which is what
-        // lets both queries share one oracle
-        val fin = s.read.parquet(snapDir(version))
-        val res = Frames.s22Classify(fin, baseSnap)
+        // lets both queries share one oracle; materialized before the
+        // snapshot tree is removed
+        val fin = s.read.parquet(snapDir(base, version))
+        Frames.s22Classify(fin, baseSnap)
           .orderBy("doc_id")
           .localCheckpoint()
-        res
-      } finally {
-        // localCheckpoint has materialized the result, so the snapshot
-        // tree is safe to drop — and dropping it HERE (not after the
-        // try) means failed runs don't accumulate tmp copies
-        rmTree(base)
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       }
     },
     Some(NorthStar4.mergeOracleSql))
@@ -2015,48 +1990,17 @@ object StreamingQueries extends QueryGroup {
     "s25_stream_source_quota",
     "streaming per-source token quota: one-long-per-key stateful admission == batch window",
     (s, dir) => {
-      import s.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft_s25_").toFile
-      base.deleteOnExit()
-      def sub(n: String) = new java.io.File(base, n)
-      val in = sub("in"); in.mkdirs()
-      val stage = sub("stage")
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree))
-        f.delete(); ()
-      }
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val docs = Tables(s, dir).documents
-        // contiguous id-range arrival slices: per-source arrival order
-        // is doc_id order — the order the oracle's window sums in
-        val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        val cut = maxId / 3 + 1
-        // one staging pass; slice k = doc_id div cut — the old range
-        // filter solved for k (the quota handler sorts by id in-batch,
-        // so within-slice row order is free)
-        stageSlices(docs, expr(s"doc_id div ${cut}L"), 3, stage)
-        val out = Frames.s25Quota(s, s.readStream
-          .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(in.getAbsolutePath))
-        val qn = s"graft_stream_${counter.incrementAndGet()}"
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(qn)
-          .option("checkpointLocation", sub("ckpt").getAbsolutePath)
-          .start()
-        try {
-          (0 to 2).foreach { k =>
-            feedSlice(stage, in, k)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table(qn).orderBy("doc_id").localCheckpoint()
-      } finally {
-        rmTree(base)
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      }
+      val docs = Tables(s, dir).documents
+      // contiguous id-range arrival slices: per-source arrival order
+      // is doc_id order — the order the oracle's window sums in
+      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+      val cut = maxId / 3 + 1
+      // one staging pass; slice k = doc_id div cut — the old range
+      // filter solved for k (the quota handler sorts by id in-batch,
+      // so within-slice row order is free)
+      runStaged("graft_s25_", docs, expr(s"doc_id div ${cut}L"), 3)(
+        (_, in) => memorySink(Frames.s25Quota(s, in), "append"))(
+        (_, q) => s.table(q.name).orderBy("doc_id").localCheckpoint())
     },
     Some("""SELECT doc_id, source, n_tokens, start_off,
               start_off < 2000 AS kept
@@ -2229,50 +2173,23 @@ object StreamingQueries extends QueryGroup {
     "s31_stream_cusum_monitor",
     "streaming CUSUM drift monitor: one-long-per-key Page statistic over ts-ordered arrival == batch closed form",
     (s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_s31_").toFile
-      def sub(n: String) = new java.io.File(base, n)
-      val in = sub("in"); in.mkdirs()
-      val stage = sub("stage")
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree))
-        f.delete(); ()
-      }
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val ev = Tables(s, dir).events
-          .select(col("event_id"), col("ts"), col("event_type"),
-            col("value"))
-        // contiguous ts-range arrival slices: cross-slice arrival
-        // order IS event-time order (CUSUM's contract)
-        val Array(lo, hi) = ev
-          .agg(unix_micros(min(col("ts"))), unix_micros(max(col("ts"))))
-          .head().toSeq.map(_.asInstanceOf[Long]).toArray
-        val cut = (hi - lo) / 3 + 1
-        // one staging pass; slice k = (tsm − lo) div cut — the old
-        // range filter solved for k (the CUSUM handler sorts by
-        // (tsm, event_id) in-batch, so within-slice row order is free)
-        stageSlices(ev,
-          expr(s"(unix_micros(ts) - ${lo}L) div ${cut}L"), 3, stage)
-        val schema = s.read
-          .parquet(new java.io.File(stage, "k=0").getAbsolutePath).schema
-        val out = Frames.s31Path(s,
-          s.readStream.schema(schema)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(in.getAbsolutePath))
-        val qn = s"graft_stream_${counter.incrementAndGet()}"
-        val q = out.writeStream.outputMode("append")
-          .format("memory").queryName(qn)
-          .option("checkpointLocation", sub("ckpt").getAbsolutePath)
-          .start()
-        try {
-          (0 to 2).foreach { k =>
-            feedSlice(stage, in, k)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+      val ev = Tables(s, dir).events
+        .select(col("event_id"), col("ts"), col("event_type"),
+          col("value"))
+      // contiguous ts-range arrival slices: cross-slice arrival
+      // order IS event-time order (CUSUM's contract)
+      val Array(lo, hi) = ev
+        .agg(unix_micros(min(col("ts"))), unix_micros(max(col("ts"))))
+        .head().toSeq.map(_.asInstanceOf[Long]).toArray
+      val cut = (hi - lo) / 3 + 1
+      // one staging pass; slice k = (tsm − lo) div cut — the old
+      // range filter solved for k (the CUSUM handler sorts by
+      // (tsm, event_id) in-batch, so within-slice row order is free)
+      runStaged("graft_s31_", ev,
+          expr(s"(unix_micros(ts) - ${lo}L) div ${cut}L"), 3)(
+        (_, in) => memorySink(Frames.s31Path(s, in), "append")) { (_, q) =>
         // batch-aggregate the emitted path into n107's alarm report
-        s.table(qn)
+        s.table(q.name)
           .groupBy("event_type")
           .agg(
             count(lit(1)).as("n_events"),
@@ -2284,9 +2201,6 @@ object StreamingQueries extends QueryGroup {
             max(col("s")).as("max_cusum_micro"))
           .orderBy("event_type")
           .localCheckpoint()
-      } finally {
-        rmTree(base)
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       }
     },
     Some(NorthStar7.cusumOracleSql))

@@ -22,13 +22,14 @@ class Bm25ParitySpec extends AnyFunSuite {
   private def corpus(rows: Seq[(Long, String)]): DataFrame =
     rows.toDF("doc_id", "text")
 
+  private def canon(df: DataFrame): Seq[(Long, Int, Long, Long)] =
+    df.collect().map { r =>
+      (r.getLong(0), r.getInt(1), r.getLong(2),
+        java.lang.Double.doubleToLongBits(r.getDouble(3)))
+    }.toSeq.sorted
+
   private def assertParity(docs: DataFrame, nQueries: Long, k: Int): Unit = {
     val R = graft.operators.Retrieval
-    def canon(df: DataFrame): Seq[(Long, Int, Long, Long)] =
-      df.collect().map { r =>
-        (r.getLong(0), r.getInt(1), r.getLong(2),
-          java.lang.Double.doubleToLongBits(r.getDouble(3)))
-      }.toSeq.sorted
     val native = canon(R.bm25MoreLikeThis(docs, nQueries, k))
     val exploded = canon(R.bm25ExplodedJoin(docs, nQueries, k))
     assert(native == exploded)
@@ -86,5 +87,26 @@ class Bm25ParitySpec extends AnyFunSuite {
       val docs = Tables(spark, dir).documents
       assertParity(docs, nQueries = 5L, k = 5)
     }
+  }
+
+  test("a query vocabulary over MaxQueryVocab takes the exploded join") {
+    val R = graft.operators.Retrieval
+    def scoresNatively(df: DataFrame): Boolean =
+      df.queryExecution.analyzed.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.expressions.Bm25QueryScores])))
+    val rest = Seq(1L -> "t1 t2 x", 2L -> "t3 y t3 t99999", 3L -> "z",
+      4L -> s"t${R.MaxQueryVocab} t0")
+    // control: at the cap the native expression scores the corpus
+    val atCap = corpus((0L -> (0 until R.MaxQueryVocab).map(i => s"t$i")
+      .mkString(" ")) +: rest)
+    assert(scoresNatively(R.bm25MoreLikeThis(atCap, 1L, 3)))
+    // one query document with MaxQueryVocab + 1 distinct tokens
+    val docs = corpus((0L -> (0 to R.MaxQueryVocab).map(i => s"t$i")
+      .mkString(" ")) +: rest)
+    val got = R.bm25MoreLikeThis(docs, 1L, 3)
+    assert(!scoresNatively(got))
+    val rows = canon(got)
+    assert(rows == canon(R.bm25ExplodedJoin(docs, 1L, 3)))
+    assert(rows.map(_._3).toSet == Set(1L, 2L, 4L))
   }
 }

@@ -247,33 +247,46 @@ class StreamingSpec extends AnyFunSuite {
     // batch cadence is a semantic: per-batch side effects (s22 writes
     // one snapshot version per batch) must see every slice, so an
     // empty slice still fires a zero-row batch
-    val base = java.nio.file.Files.createTempDirectory("graft_slices_").toFile
-    base.deleteOnExit()
-    val stage = new java.io.File(base, "stage")
-    val in = new java.io.File(base, "in")
-    in.mkdirs()
     val df = spark.range(0, 10).toDF("id")
-    // slice 1 gets no rows
-    queries.StreamingQueries.stageSlices(df,
-      when(col("id") < 5, lit(0)).otherwise(lit(2)), 3, stage)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     val record = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
         id: Long) => { seen.add((id, batch.count())); () }
-    val q = spark.readStream.schema("id LONG").parquet(in.getAbsolutePath)
-      .writeStream
-      .option("checkpointLocation", new java.io.File(base, "ckpt").getAbsolutePath)
-      .foreachBatch(record)
-      .start()
-    try {
-      (0 until 3).foreach { k =>
-        queries.StreamingQueries.feedSlice(stage, in, k)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    // slice 1 gets no rows
+    queries.StreamingQueries.runStaged("graft_slices_", df,
+        when(col("id") < 5, lit(0)).otherwise(lit(2)), 3)(
+      (_, in) => in.writeStream.foreachBatch(record)) { (base, _) =>
+      val e = intercept[IllegalArgumentException](
+        queries.StreamingQueries.feedSlice(new java.io.File(base, "stage"),
+          new java.io.File(base, "in"), 3))
+      assert(e.getMessage.contains("k=3"))
+    }
     import scala.jdk.CollectionConverters._
     assert(seen.asScala.toList == List((0L, 5L), (1L, 0L), (2L, 5L)))
-    val e = intercept[IllegalArgumentException](
-      queries.StreamingQueries.feedSlice(stage, in, 3))
-    assert(e.getMessage.contains("k=3"))
+  }
+
+  test("runStaged: a throwing run removes its scratch tree and restores shuffle partitions") {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "12")
+    try {
+      var base: java.io.File = null
+      var during: String = null
+      val e = intercept[IllegalStateException] {
+        queries.StreamingQueries.runStaged("graft_staged_spec_",
+            spark.range(0, 10).toDF("id"), col("id") % 2, 2)(
+          (_, in) => in.writeStream.foreachBatch(
+            (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+              _: Long) => ())) { (b, _) =>
+          base = b
+          during = spark.conf.get(key)
+          assert(new java.io.File(b, "stage/k=1").isDirectory)
+          throw new IllegalStateException("boom")
+        }
+      }
+      assert(e.getMessage == "boom")
+      assert(during == "8", "state partitions: min(8, session value)")
+      assert(base != null && !base.exists(), s"$base survived the failure")
+      assert(spark.conf.get(key) == "12")
+    } finally spark.conf.set(key, prior)
   }
 }
