@@ -8,10 +8,12 @@ package graft
   */
 object Bench {
   /** One per-query measurement. `secs` is the CONFIRMED value: when the
-    * first pass exceeded the query's committed ceiling, an isolated
-    * re-time ran and the minimum was kept — `firstPass`/`retry` record
-    * both numbers so the artifact itself shows whether a breach was
-    * noise (retry far under) or real (retry also over).
+    * first pass exceeded the query's committed ceiling, isolated
+    * re-times ran and the minimum was kept ([[confirm]]). `firstPass`
+    * and `retry` (the better re-time) record both numbers, so
+    * min(firstPass, retry) is `secs` and the artifact itself shows
+    * whether a breach was noise (retry far under) or real (retry also
+    * over). `breach` holds the second re-time's evidence.
     */
   final case class Timing(
       name: String,
@@ -21,178 +23,36 @@ object Bench {
       retry: Option[Double] = None,
       gc: Option[GcProbe] = None,
       retryGc: Option[GcProbe] = None,
-      storm: Option[StormEvidence] = None)
-
-  /** Receipts for one surviving ceiling breach's host-vs-code
-    * adjudication: every sentinel reading taken while the breach stood
-    * (first entry = the reading that decided storm vs real), the
-    * matching host-iowait readings (proc kind only — the channel that
-    * separates disk pressure from CPU steal), the kernel memory-PSI
-    * readings (avg10 %, −1 entries dropped), how many 10 s back-off
-    * waits ran, the post-storm re-time if one ran, and — for a QUIET-
-    * sentinel breach — the spaced second isolated retry plus its GC
-    * probe. r11's n58 "108.7 s first pass during a storm" and n112
-    * "sentinel 8× baseline" calls lived only in prose — these make
-    * every such adjudication replayable from the artifact alone.
-    *
-    * The third environmental mode (co-tenant MEMORY pressure) blinded
-    * both CPU channels in the r13 record: n57's 33.7 s first pass and
-    * 45.6 s retry both landed inside one pressure window with ext/io
-    * at 0.000, so the committed round artifact failed its gate with no
-    * on-artifact answer. Three additions close that: the PSI channel
-    * (the kernel signal for exactly this mode), the spaced second
-    * retry (a cool-down long enough to exit the window the first retry
-    * died in), and `verdict`/`evidence` — a machine-readable
-    * adjudication ([[Bench.adjudicateBreach]]) emitted for any breach
-    * that STILL survives, so a replay can distinguish "gate defect"
-    * from "host defect" without re-running anything.
-    */
-  final case class StormEvidence(
-      readings: Seq[Double], waits: Int, postStorm: Option[Double],
-      ioReadings: Seq[Double] = Seq.empty,
-      psiReadings: Seq[Double] = Seq.empty,
-      retry2: Option[Double] = None,
-      retry2Gc: Option[GcProbe] = None,
-      verdict: Option[String] = None,
-      evidence: Option[String] = None)
-
-  /** Sweep-level host-health evidence: which sentinel KIND this run
-    * used ("proc_external_busy" = out-of-JVM /proc reading, external
-    * CPU fraction in [0,1]; "jvm_range_sum" = the legacy in-JVM job,
-    * seconds), the baseline (min of the readings that produced it; −1
-    * when every baseline reading failed and detection was disabled),
-    * and labeled checkpoint readings at sweep start/mid/end. The
-    * checkpoints pin the sentinel's OWN regime: the /proc reading is
-    * two kernel tick samples, so it CANNOT absorb shared-JVM debt —
-    * on a quiet host it stays ~flat across a full sweep by
-    * construction (the r12 confound, where the in-JVM sentinel read
-    * 4.5× baseline at the end checkpoint purely from JVM debt, is
-    * removed rather than argued around).
-    */
-  final case class SweepMeta(
-      kind: String,
-      baseline: Double,
-      baselineReadings: Seq[Double],
-      checkpoints: Seq[(String, Double)])
+      breach: Option[Breach] = None)
 
   /** JVM-pressure evidence captured around one timed section: GC time
     * spent DURING the window and used heap at its end (before the
-    * harness-hygiene cache drop). The shared-JVM debt story — which
-    * adjudicates first-pass flaps like r8's 41 s n44 — rides these
-    * numbers instead of prose inference.
+    * harness-hygiene cache drop).
     */
   final case class GcProbe(gcMs: Long, heapGb: Double)
 
-  /** Machine-readable host-vs-code call for a breach that survived
-    * every retry, from evidence the artifact already carries. Rules,
-    * in order (first hit wins; the evidence string names it):
-    *
-    *   1. external CPU storm observed at any reading → environmental
-    *      (the r11 n58 mode: co-tenant steal, sentinel well over 0.35);
-    *   2. kernel memory PSI avg10 ≥ 1 % at any reading → environmental
-    *      (the r13 n57/n89 mode: co-tenant memory pressure, both CPU
-    *      channels quiet — PSI is the signal they were blind to);
-    *   3. GC-bound best retry (gc ≥ 2 s AND ≥ 10 % of wall) →
-    *      environmental (the same mode's JVM-side fingerprint: n89
-    *      retimed at 43 s with 5.65 s GC vs a ~0.3 s healthy profile);
-    *   4. retries disagree ≥ 1.8× under quiet sentinels →
-    *      environmental (a genuine plan regression reproduces stably
-    *      in isolation; wild spread with no host signal = a contention
-    *      window the channels cannot see);
-    *   5. the SWEEP ITSELF is degraded → environmental. When the
-    *      median completed query in THIS sweep is running ≥ 1.25× its
-    *      committed bench_last.json reading (≥ 20 samples), the host
-    *      is in a whole-sweep slow regime no per-query evidence can
-    *      see: the r15 s27 episode — 21.2 s vs a 17.5 ceiling with
-    *      STABLE retries (spread 1.1×, so rule 6's wobble guard
-    *      rightly refused), quiet sentinels, committed reading
-    *      11.4 s — happened inside a sweep where q01 ran 4.26 s vs
-    *      its committed 2.96 s and the total read 607 s vs 450 s;
-    *      a fresh-JVM cold min-of-3 immediately after read 11.0 s.
-    *      A persistent degraded window produces stable slow retries
-    *      (they run inside the same window), which is exactly the
-    *      shape a genuine regression has — the sweep-wide ratio is
-    *      the evidence that separates them, and a real single-query
-    *      regression cannot move the sweep median. KNOWN BLIND SPOT:
-    *      a code change that broadly slows the ENGINE (session config,
-    *      a shared operator/expression) also moves the sweep median
-    *      and this rule would self-excuse every resulting breach as
-    *      "host regime". The rule is acceptable anyway because (a) it
-    *      LABELS — BenchGuard still fails the artifact, so a broad
-    *      regression is a red gate either way, just with a wrong
-    *      adjudication string; and (b) the round discipline closes the
-    *      hole out-of-band: every round ends with a quiet-host cold
-    *      min-of-3 of a pace-control query (q01) recorded in
-    *      docs/PLANS.md, which a whole-engine slowdown cannot pass.
-    *      A replay reading this verdict should cross-check the
-    *      sweep-pace claim against that committed control reading
-    *      before trusting it;
-    *   6. the on-disk quiet-regime evidence contradicts the breach →
-    *      environmental. `healthy` is the query's reading in the last
-    *      committed artifact (bench_last.json — a record that passed
-    *      BenchGuard, so it sits under the ceiling by construction).
-    *      When the best retry is ≥ 1.8× that demonstrated-healthy
-    *      reading AND the retries still wobble (spread ≥ 1.3), the
-    *      episode is a contention window rule 4's threshold missed,
-    *      not a plan change: a real regression reproduces at a STABLE
-    *      slow time, and the healthy reading proves the plan itself
-    *      runs fast on this host. This is the r14 s33 fixture — spread
-    *      1.67× slipped under rule 4, the committed artifact read
-    *      1.40 s one file away, and the round record shipped a false
-    *      `regression_suspected` a judge refuted in one cold re-time.
-    *      The stability guard keeps genuine regressions honest: a code
-    *      change that makes a query stably 2× slower has spread ~1.0×
-    *      and still lands in rule 7;
-    *   7. otherwise → regression_suspected: quiet host, healthy-pace
-    *      sweep, stable timings, healthy GC, no contradicting on-disk
-    *      band — the query's own plan is the cause until a code read
-    *      says otherwise.
-    *
-    * The verdict LABELS; it never changes an exit code. BenchGuard
-    * still fails the artifact — but the failure now carries its own
-    * adjudication instead of demanding a human re-run.
+  /** Host pressure read from the kernel ([[HostSentinel]]): the
+    * external CPU busy fraction and memory PSI avg10 (%). A channel
+    * that cannot be read is -1, never a quiet-looking 0.
     */
-  private[graft] def adjudicateBreach(
-      wallSecs: Seq[Double], bestGcMs: Long, bestWallSecs: Double,
-      maxExt: Double, maxPsi: Double, stormed: Boolean,
-      healthy: Option[Double] = None,
-      sweepMedianRatio: Option[Double] = None): (String, String) = {
-    val times = wallSecs.filter(_ >= 0)
-    val spread =
-      if (times.isEmpty || times.min <= 0) 1.0 else times.max / times.min
-    if (stormed)
-      ("environmental_suspected",
-        f"external CPU storm observed (max ext ${maxExt}%.3f)")
-    else if (maxPsi >= 1.0)
-      ("environmental_suspected",
-        f"kernel memory PSI avg10 ${maxPsi}%.2f%% during breach")
-    else if (bestGcMs >= 2000 && bestGcMs >= 100.0 * bestWallSecs)
-      ("environmental_suspected",
-        f"gc-bound retry: ${bestGcMs}ms GC on ${bestWallSecs}%.2fs wall " +
-          "(memory-pressure fingerprint)")
-    else if (spread >= 1.8)
-      ("environmental_suspected",
-        f"retries disagree ${spread}%.1fx under quiet sentinels " +
-          f"(ext ${maxExt}%.3f, psi ${maxPsi}%.2f) — contention window")
-    else if (sweepMedianRatio.exists(_ >= 1.25))
-      ("environmental_suspected",
-        f"degraded sweep: median completed query at " +
-          f"${sweepMedianRatio.get}%.2fx its committed reading " +
-          f"(ext ${maxExt}%.3f, psi ${maxPsi}%.2f) — host regime, " +
-          "not this plan")
-    else if (healthy.exists(h =>
-        h > 0 && bestWallSecs >= 1.8 * h && spread >= 1.3))
-      ("environmental_suspected",
-        f"best retry ${bestWallSecs}%.2fs is ${bestWallSecs / healthy.get}%.1fx " +
-          f"the committed quiet-regime reading ${healthy.get}%.2fs " +
-          f"(bench_last.json) with retry spread ${spread}%.1fx — " +
-          "contention window; the plan is demonstrated healthy on disk")
-    else
-      ("regression_suspected",
-        f"no environmental signal: ext ${maxExt}%.3f, psi ${maxPsi}%.2f, " +
-          f"gc ${bestGcMs}ms on ${bestWallSecs}%.2fs, spread ${spread}%.1fx" +
-          healthy.filter(_ > 0).map(h =>
-            f", committed reading ${h}%.2fs").getOrElse(""))
+  final case class HostReading(extBusy: Double, memPsi: Double)
+
+  /** Raw evidence for a breach that outlived its first isolated
+    * re-time: the second re-time after the cool-down, its GC probe, and
+    * the host reading taken when the first re-time came back over.
+    */
+  final case class Breach(
+      retry2: Double, retry2Gc: Option[GcProbe], host: HostReading)
+
+  /** A timed sweep plus the host readings at its start and end. */
+  final case class Sweep(
+      timings: Seq[Timing], start: HostReading, end: HostReading)
+
+  private def hostReading(): HostReading = {
+    def read(f: => Double): Double =
+      try f catch { case _: Throwable => -1.0 }
+    HostReading(read(HostSentinel.externalBusyFraction(500)),
+      read(HostSentinel.memoryPsiAvg10()))
   }
 
   private def gcTotalMs(): Long = {
@@ -217,23 +77,17 @@ object Bench {
 
   /** Warmed, cache-isolated timing pass over every registered query,
     * SELF-CONFIRMING: any first-pass timing over its committed ceiling
-    * is re-measured once in isolation (clean caches, gc'd heap) and the
-    * minimum kept. A 150-query shared-JVM run lands GC/JIT debt on
-    * arbitrary queries (the r5 q25/q26/q27 and r6 n43 flaps, both pinned
-    * as harness noise via isolated cold re-times); a genuine plan
-    * regression is slow in isolation too and stays visible. The
-    * confirm pass used to live only in [[graft.tools.BenchGuard]]'s own
-    * run path, so the driver's artifact could record an unconfirmed
-    * 3× flap the committed evidence couldn't reach (r6 n43) — folding
-    * it here makes every artifact carry its own adjudication.
-    * Shared with BenchGuard so the regression gate times exactly what
-    * the driver times.
+    * goes through [[confirm]] before it is recorded. A 150-query
+    * shared-JVM run lands GC/JIT debt on arbitrary queries (the r5
+    * q25/q26/q27 and r6 n43 flaps, both pinned as harness noise via
+    * isolated cold re-times); a genuine plan regression is slow in
+    * isolation too and stays visible. The confirm pass lives here, not
+    * only in [[graft.tools.BenchGuard]], so a plain `Bench` run's own
+    * artifact carries both numbers (r6 n43 was an unconfirmed 3× flap
+    * in the artifact). Shared with BenchGuard so the regression gate
+    * times exactly what [[main]] times.
     */
-  def run(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): Seq[Timing] = runWithMeta(spark, sfDir)._1
-
-  def runWithMeta(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): (Seq[Timing], SweepMeta) = {
+  def run(spark: org.apache.spark.sql.SparkSession, sfDir: String): Sweep = {
     // JVM/codegen warmup on the smallest SF so per-query times measure
     // the engine, not first-use JIT (one full pass, results discarded).
     SparkEntry.queries.foreach { case (_, fn) =>
@@ -248,114 +102,10 @@ object Bench {
     // warm-up left caches behind: start the timed section clean
     dropAllBlocks()
     val ceil = budgets()
-    // The last COMMITTED sweep's per-query readings. bench_last.json is
-    // written only when a run COMPLETES, so mid-sweep the file on disk
-    // is the previous full record — a BenchGuard-passing artifact whose
-    // readings sit under their ceilings by construction. This is the
-    // rule-5 healthy-band evidence for [[adjudicateBreach]]: the r14
-    // s33 episode (3.53 s vs 3.3 ceiling, spread 1.67× under quiet
-    // sentinels) was labeled regression_suspected while this file read
-    // 1.40 s one lookup away.
-    val committedReadings: Map[String, Double] =
-      try graft.tools.BenchGuard.extractQueries(
-        java.nio.file.Files.readString(
-          java.nio.file.Paths.get("bench_last.json")))
-      catch { case _: Throwable => Map.empty }
-    // Sentinel kind, decided once per sweep: the out-of-process /proc
-    // reading when the platform provides it (external CPU fraction —
-    // cannot absorb bench-JVM debt), the in-JVM range-sum job as the
-    // non-Linux fallback (seconds). The artifact records which kind
-    // its readings are in.
-    val sentinelKind =
-      try { HostSentinel.externalBusyFraction(100); "proc_external_busy" }
-      catch { case _: Throwable => "jvm_range_sum" }
-    def sentinelRead(): Double =
-      if (sentinelKind == "proc_external_busy")
-        HostSentinel.externalBusyFraction(500)
-      else sentinelSecs(spark)
-    // healthy-host sentinel baseline, min-of-3 after warmup (min is the
-    // contention-robust statistic). Each reading is try-wrapped: a
-    // transient failure must not abort the sweep and lose every timing
-    // — failed readings drop out. ALL readings failing DISABLES storm
-    // detection for the run (baseline −1 in the artifact, loud
-    // warning): detection never fires, breaches stand un-adjudicated
-    // for a human to read against the warning. The r12 behavior —
-    // falling back to the 0.05 s floor — actually OVER-fired (3× floor
-    // = 0.15 s sat below the healthy in-JVM reading), burning up to
-    // 60 s of back-off per breach while the comment claimed the
-    // opposite direction; disabled-with-warning is the direction the
-    // comment promised.
-    val baselineReadings = Seq.fill(3)(
-      try sentinelRead() catch { case _: Throwable => -1.0 })
-      .filter(_ >= 0)
-    val sentinel0 =
-      if (baselineReadings.isEmpty) Double.MaxValue
-      else if (sentinelKind == "jvm_range_sum")
-        math.max(0.05, baselineReadings.min)
-      else baselineReadings.min
-    // storm = external pressure well past baseline. For the /proc kind
-    // the threshold has an absolute floor (0.35 of the machine busy
-    // elsewhere): a quiet-host baseline is legitimately ~0, so a pure
-    // 3× rule would storm on noise.
-    def stormy(reading: Double): Boolean =
-      if (sentinel0 == Double.MaxValue) false
-      else if (sentinelKind == "proc_external_busy")
-        reading > math.max(0.35, 3 * sentinel0)
-      else reading > 3 * sentinel0
-    if (baselineReadings.isEmpty)
-      println("Bench: WARNING all sentinel baseline readings failed — " +
-        "storm detection DISABLED this run; any ceiling breach stands " +
-        "un-adjudicated")
-    else if (baselineReadings.size < 3)
-      println(s"Bench: WARNING ${3 - baselineReadings.size} sentinel " +
-        "baseline reading(s) failed — baseline from the survivors")
-    if (sentinelKind == "jvm_range_sum" && baselineReadings.nonEmpty &&
-        sentinel0 > 1.0)
-      println(f"Bench: WARNING sentinel baseline ${sentinel0}%.2fs is " +
-        "anomalously high (healthy ~0.2s) — a storm during baseline " +
-        "measurement inflates the 3x threshold and storm detection may " +
-        "not fire this run")
-    if (sentinelKind == "proc_external_busy" && baselineReadings.nonEmpty &&
-        sentinel0 > 0.35)
-      println(f"Bench: WARNING host already ${sentinel0 * 100}%.0f%% " +
-        "externally busy during baseline — this sweep runs under load")
-    val checkpoints = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    // each checkpoint records BOTH pressure channels from one window:
-    // "<label>" = external CPU (the gating signal), "<label>_io" =
-    // host iowait fraction — the channel a CPU sentinel is blind to
-    // (an r13 sweep slowed its documents-heavy tail 1.5–3× while
-    // external CPU read ~0.03; the io series makes that mode readable
-    // from the artifact). The jvm fallback has no io channel.
-    // "<label>_mem" = kernel memory PSI avg10 (%): the channel for the
-    // third environmental mode (co-tenant memory pressure — r13's n57/
-    // n89 episodes ran with ext and io BOTH 0.000). Only emitted when
-    // /proc/pressure/memory is readable, so its absence in an artifact
-    // means "channel unavailable", never "quiet".
-    def checkpoint(label: String): Unit =
-      try {
-        if (sentinelKind == "proc_external_busy") {
-          val (ext, io) = HostSentinel.pressure(500)
-          checkpoints += (label -> ext)
-          checkpoints += (s"${label}_io" -> io)
-          try checkpoints += (s"${label}_mem" -> HostSentinel.memoryPsiAvg10())
-          catch { case _: Throwable => () }
-        } else checkpoints += (label -> sentinelRead())
-      } catch { case _: Throwable => () }
     val names = sweepOrder(SparkEntry.queries.keySet.toSeq)
       .map(n => n -> SparkEntry.queries(n))
-    // Sweep-pace evidence for adjudicateBreach rule 5: first-pass
-    // timing over the committed reading, per completed query (sub-
-    // 0.2 s committed readings skipped — scheduler noise, not pace).
-    // A whole-sweep degraded regime shows up here as a median well
-    // over 1 while every sentinel channel stays quiet (the r15 s27
-    // mode: 607 s sweep vs the committed 450 s, ext ≤ 0.035).
-    val paceRatios = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def sweepMedianRatio: Option[Double] =
-      if (paceRatios.size < 20) None
-      else Some(paceRatios.sorted.apply(paceRatios.size / 2))
-    checkpoint("start")
-    val timings = names.zipWithIndex.map { case ((name, fn), idx) =>
-      if (idx == names.size / 2) checkpoint("mid")
+    val start = hostReading()
+    val timings = names.map { case (name, fn) =>
       val g0 = gcTotalMs()
       val t0 = System.nanoTime()
       val first = try {
@@ -375,8 +125,6 @@ object Bench {
         // 0.9s queries were recording 7s purely from inherited heap debt.
         dropAllBlocks()
         System.gc()
-        committedReadings.get(name).filter(_ >= 0.2)
-          .foreach(c => paceRatios += t / c)
         Timing(name, t, gc = Some(probe))
       } catch {
         case e: Throwable =>
@@ -386,121 +134,57 @@ object Bench {
           Timing(name, -1.0, err = Some(s"${e.getClass.getSimpleName}: ${
             String.valueOf(e.getMessage).take(80)}"))
       }
-      first match {
-        case tm @ Timing(n, t, None, _, _, _, _, _)
-            if t >= 0 && ceil.get(n).exists(t > _) =>
-          var (r, rp) = try retime(spark, sfDir, n)
-            catch { case _: Throwable => (t, None: Option[GcProbe]) }
-          println(f"Bench: $n first-pass ${t}%.2fs over its " +
-            f"${ceil(n)}%.2fs ceiling — isolated re-time ${r}%.2fs (min kept)")
-          // STILL over after one isolated re-time: adjudicate host vs
-          // code with the sentinel before letting the breach stand. An
-          // inflated sentinel proves an external stall storm (the
-          // observed mode: co-tenant CPU steal inflating random queries
-          // 2-10× for tens of seconds) — wait it out, re-time once
-          // more, keep the min. A normal sentinel means the regression
-          // is the query's own and no amount of re-timing will save it.
-          // EVERY sentinel reading taken here lands in the artifact's
-          // storm object (r11's adjudications lived only in prose).
-          var storm: Option[StormEvidence] = None
-          if (math.min(t, r) > ceil(n)) {
-            // read BOTH channels at breach time (proc kind): external
-            // CPU gates, iowait is recorded evidence
-            def readBoth(): (Double, Double) =
-              try {
-                if (sentinelKind == "proc_external_busy")
-                  HostSentinel.pressure(500)
-                else (sentinelRead(), -1.0)
-              } catch { case _: Throwable => (0.0, -1.0) }
-            def readPsi(): Double =
-              try HostSentinel.memoryPsiAvg10()
-              catch { case _: Throwable => -1.0 }
-            val firstRetry = r // before the rescue paths fold minima into r
-            val (s, sIo) = readBoth()
-            val readings = scala.collection.mutable.ArrayBuffer(s)
-            val ioReadings = scala.collection.mutable.ArrayBuffer(sIo)
-            val psiReadings = scala.collection.mutable.ArrayBuffer(readPsi())
-            var waits = 0
-            var post: Option[Double] = None
-            var retry2: Option[Double] = None
-            var retry2Gc: Option[GcProbe] = None
-            val stormed = stormy(s)
-            if (stormed) {
-              println(f"Bench: $n still over with sentinel ${s}%.3f vs " +
-                f"baseline ${sentinel0}%.3f ($sentinelKind) — host stall " +
-                "storm; backing off")
-              var cur = s
-              while (waits < 6 && stormy(cur)) {
-                Thread.sleep(10000L); waits += 1
-                val (c2, io2) = readBoth()
-                cur = c2
-                readings += cur
-                ioReadings += io2
-                psiReadings += readPsi()
-              }
-              val (r2, rp2) = try retime(spark, sfDir, n)
-                catch { case _: Throwable => (r, rp) }
-              println(f"Bench: $n post-storm re-time ${r2}%.2fs")
-              post = Some(r2)
-              if (r2 < r) { r = r2; rp = rp2 }
-            } else {
-              // QUIET-sentinel breach: both CPU channels say the host is
-              // idle, yet two isolated timings are over ceiling. The r13
-              // n57 record shows why one retry is not enough — its 45.6 s
-              // retry landed inside the SAME co-tenant memory-pressure
-              // window as the 33.7 s first pass, and the sweep shipped a
-              // failing artifact with no on-artifact answer. A spaced
-              // second retry exits the window when the pressure is
-              // transient (the observed windows inflate whole blocks for
-              // tens of seconds, then the very next pass is clean), and
-              // when it does NOT rescue, its reading strengthens the
-              // verdict below.
-              println(f"Bench: $n still over with QUIET sentinels (ext " +
-                f"${s}%.3f, io ${sIo}%.3f, psi ${psiReadings.head}%.2f) — " +
-                "spaced second isolated retry after 20s cool-down")
-              Thread.sleep(20000L)
-              val (c2, io2) = readBoth()
-              readings += c2; ioReadings += io2; psiReadings += readPsi()
-              val (r2, rp2) = try retime(spark, sfDir, n)
-                catch { case _: Throwable => (r, rp) }
-              println(f"Bench: $n spaced re-time ${r2}%.2fs")
-              retry2 = Some(r2)
-              retry2Gc = rp2
-              if (r2 < r) { r = r2; rp = rp2 }
-            }
-            // a breach that STILL survives gets a machine-readable
-            // host-vs-code verdict on the artifact (never an exit-code
-            // change): a replay can then distinguish "gate defect" from
-            // "host defect" without re-running the sweep
-            val verdict =
-              if (math.min(t, r) > ceil(n)) {
-                val bestGc =
-                  (if (r <= t) rp else tm.gc).map(_.gcMs).getOrElse(0L)
-                val v = adjudicateBreach(
-                  Seq(t, firstRetry) ++ retry2.toSeq ++ post.toSeq,
-                  bestGc, math.min(t, r),
-                  readings.max, psiReadings.filter(_ >= 0)
-                    .foldLeft(-1.0)(math.max), stormed,
-                  committedReadings.get(n).filter(_ > 0),
-                  sweepMedianRatio)
-                println(s"Bench: $n SURVIVING breach verdict ${v._1} (${v._2})")
-                Some(v)
-              } else None
-            storm = Some(StormEvidence(readings.toSeq, waits, post,
-              ioReadings.toSeq.filter(_ >= 0),
-              psiReadings.toSeq.filter(_ >= 0),
-              retry2, retry2Gc, verdict.map(_._1), verdict.map(_._2)))
-          }
-          Timing(n, math.min(t, r), firstPass = Some(t), retry = Some(r),
-            gc = tm.gc, retryGc = rp, storm = storm)
-        case other => other
-      }
+      confirm(first, ceil.get(name), () => retime(spark, sfDir, name),
+        () => Thread.sleep(CoolDownMs))
     }
-    checkpoint("end")
-    (timings, SweepMeta(sentinelKind,
-      if (sentinel0 == Double.MaxValue) -1.0 else sentinel0,
-      baselineReadings, checkpoints.toSeq))
+    Sweep(timings, start, hostReading())
   }
+
+  /** The pause before a breach's second re-time. The observed
+    * contention windows (co-tenant CPU steal, memory pressure) inflate
+    * whole blocks of queries for tens of seconds and then clear; r12's
+    * storm back-offs, the longest in any committed artifact, waited
+    * 10–20 s.
+    */
+  private val CoolDownMs = 20000L
+
+  /** The one ceiling-breach policy. A first pass over its `ceiling`
+    * gets an isolated re-time. If the better of the two is still over,
+    * the host is read, one cool-down runs, and a second isolated
+    * re-time follows. The minimum of the three is kept, and `retry`
+    * holds the better re-time. A re-time that throws keeps the prior
+    * timing. An errored, under-ceiling or ceiling-less timing passes
+    * through untouched. The breach still fails BenchGuard if the
+    * minimum is over; the recorded evidence only says what the host
+    * looked like while it happened.
+    */
+  private[graft] def confirm(first: Timing, ceiling: Option[Double],
+      retime: () => (Double, Option[GcProbe]), coolDown: () => Unit,
+      host: () => HostReading = () => hostReading()): Timing =
+    (first, ceiling) match {
+      case (Timing(n, t, None, _, _, _, _, _), Some(c)) if t > c =>
+        def again(prior: (Double, Option[GcProbe])) =
+          try retime() catch { case _: Throwable => prior }
+        val (r1, g1) = again((t, None))
+        println(f"Bench: $n first-pass ${t}%.2fs over its ${c}%.2fs " +
+          f"ceiling — isolated re-time ${r1}%.2fs (min kept)")
+        if (math.min(t, r1) <= c)
+          first.copy(secs = math.min(t, r1), firstPass = Some(t),
+            retry = Some(r1), retryGc = g1)
+        else {
+          val h = host()
+          println(f"Bench: $n still over (ext ${h.extBusy}%.3f, psi " +
+            f"${h.memPsi}%.2f) — second isolated re-time after a " +
+            s"${CoolDownMs / 1000} s cool-down")
+          coolDown()
+          val (r2, g2) = again((r1, g1))
+          println(f"Bench: $n second re-time ${r2}%.2fs")
+          val (r, g) = if (r2 < r1) (r2, g2) else (r1, g1)
+          first.copy(secs = math.min(t, r), firstPass = Some(t),
+            retry = Some(r), retryGc = g, breach = Some(Breach(r2, g2, h)))
+        }
+      case _ => first
+    }
 
   /** Pinned sweep order (sweep_order.json: {"name": slot}): a
     * committed query keeps its slot forever; names not yet in the file
@@ -524,27 +208,9 @@ object Bench {
   }
 
   /** One isolated re-measurement of a single query (clean caches, gc'd
-    * heap) — the [[run]] noise-confirm pass. Mirrors the timed section
-    * of [[run]] exactly.
+    * heap) — the [[confirm]] re-time. Mirrors the timed section of
+    * [[run]] exactly.
     */
-  /** Fixed CPU-bound sentinel job (~0.2 s on a healthy host): a pure
-    * range-sum whose cost cannot depend on any registry code or data.
-    * When a query's isolated re-time is STILL over its ceiling, this
-    * number adjudicates host vs code: an inflated sentinel means the
-    * machine itself is stalling (external CPU steal — observed as a
-    * ~100 s first pass on n58 with a 12 s retry inside one r11 sweep),
-    * so the breach is re-timed again after the sentinel recovers; a
-    * normal sentinel means the regression is real and the breach
-    * stands however many re-times run.
-    */
-  private def sentinelSecs(
-      spark: org.apache.spark.sql.SparkSession): Double = {
-    val t0 = System.nanoTime()
-    spark.range(0L, 200000000L, 1L, 32)
-      .agg(org.apache.spark.sql.functions.sum("id")).collect()
-    (System.nanoTime() - t0) / 1e9
-  }
-
   def retime(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, name: String): (Double, Option[GcProbe]) = {
     GraftSession.dropAllBlocks(spark)
@@ -565,8 +231,8 @@ object Bench {
     // optimizer rules (RewriteSizeOfSplit). A hand-rolled session here
     // would benchmark a different engine than Verify checks.
     val spark = GraftSession.build("graft-bench")
-    val (results, meta) = runWithMeta(spark, sfDir)
-    val line = jsonLine(results, sfDir, Some(meta))
+    val sweep = run(spark, sfDir)
+    val line = jsonLine(sweep.timings, sfDir, Some((sweep.start, sweep.end)))
     println(line)
     writeArtifact(line)
     spark.stop()
@@ -588,11 +254,12 @@ object Bench {
   /** The one-line bench JSON (shared with BenchGuard, whose timing runs
     * would otherwise discard the very numbers that justify its verdict).
     * `queries` carries the CONFIRMED values; `retimed` records every
-    * first-pass ceiling breach as {"first": x, "retry": y} so the
-    * artifact adjudicates its own flaps.
+    * first-pass ceiling breach as {"first": x, "retry": y, …} so the
+    * artifact shows its own flaps; `host` holds the sweep's start and
+    * end [[HostReading]]s.
     */
   def jsonLine(results: Seq[Timing], sfDir: String,
-      meta: Option[SweepMeta] = None): String = {
+      host: Option[(HostReading, HostReading)] = None): String = {
     def fmt(v: Double): String =
       if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     // full JSON string escape — AnalysisException messages are often
@@ -621,50 +288,27 @@ object Bench {
     val gcs = results.collect { case t if t.gc.isDefined =>
       "\"" + t.name + "\":" + probeJson(t.gc.get)
     }.mkString("{", ",", "}")
-    val retimed = results.collect {
-      case t @ Timing(n, _, _, Some(f), Some(r), _, _, _) =>
-        val gcFields =
-          t.gc.map(p => ",\"first_gc_ms\":" + p.gcMs +
-            ",\"first_heap_gb\":" + fmt(p.heapGb)).getOrElse("") +
-          t.retryGc.map(p => ",\"retry_gc_ms\":" + p.gcMs +
-            ",\"retry_heap_gb\":" + fmt(p.heapGb)).getOrElse("")
-        "\"" + n + "\":{\"first\":" + fmt(f) + ",\"retry\":" + fmt(r) +
-          gcFields + "}"
-    }.mkString("{", ",", "}")
-    // host-health receipts: sentinel baseline + start/mid/end checkpoint
-    // readings (sweep-level), and per-breach sentinel readings / back-off
-    // counts / post-storm re-times — so every host-vs-code adjudication
-    // is replayable from the JSON alone instead of from prose. Keys here
+    def probeFields(label: String, p: GcProbe): String =
+      ",\"" + label + "_gc_ms\":" + p.gcMs +
+        ",\"" + label + "_heap_gb\":" + fmt(p.heapGb)
+    def hostFields(h: HostReading): String =
+      "\"ext_busy\":" + fmt(h.extBusy) + ",\"mem_psi\":" + fmt(h.memPsi)
+    // the {"first":x,"retry":y prefix is what BenchGuard's last-resort
+    // clip fallback reads; everything after it is evidence. Keys here
     // never match BenchGuard's query-name shape, so the truncated-
     // artifact fallback grep cannot mistake them for timings.
-    val stormObj = meta.map { m =>
-      val arr = m.baselineReadings.map(fmt).mkString("[", ",", "]")
-      val cps = m.checkpoints.map { case (l, v) => "\"" + l + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val breaches = results.collect {
-        case t if t.storm.isDefined =>
-          val se = t.storm.get
-          // verdict/evidence stay LAST in the breach object: BenchGuard's
-          // replay regex anchors on "sentinel":[ then scans to "verdict"
-          // within the same (nesting-free) object
-          "\"" + t.name + "\":{\"sentinel\":" +
-            se.readings.map(fmt).mkString("[", ",", "]") +
-            ",\"io\":" + se.ioReadings.map(fmt).mkString("[", ",", "]") +
-            ",\"psi\":" + se.psiReadings.map(fmt).mkString("[", ",", "]") +
-            ",\"waits\":" + se.waits +
-            ",\"post_storm\":" + se.postStorm.map(fmt).getOrElse("null") +
-            se.retry2.map(v => ",\"retry2\":" + fmt(v)).getOrElse("") +
-            se.retry2Gc.map(p => ",\"retry2_gc_ms\":" + p.gcMs +
-              ",\"retry2_heap_gb\":" + fmt(p.heapGb)).getOrElse("") +
-            se.verdict.map(v => ",\"verdict\":\"" + esc(v) +
-              "\",\"evidence\":\"" + esc(se.evidence.getOrElse("")) + "\"")
-              .getOrElse("") + "}"
-      }.mkString("{", ",", "}")
-      "\"storm\":{\"kind\":\"" + esc(m.kind) + "\"" +
-        ",\"baseline\":" + fmt(m.baseline) +
-        ",\"baseline_readings\":" + arr +
-        ",\"checkpoints\":" + cps +
-        ",\"breaches\":" + breaches + "},"
+    val retimed = results.collect {
+      case t @ Timing(n, _, _, Some(f), Some(r), _, _, _) =>
+        "\"" + n + "\":{\"first\":" + fmt(f) + ",\"retry\":" + fmt(r) +
+          t.gc.map(probeFields("first", _)).getOrElse("") +
+          t.retryGc.map(probeFields("retry", _)).getOrElse("") +
+          t.breach.map(b => ",\"retry2\":" + fmt(b.retry2) +
+            b.retry2Gc.map(probeFields("retry2", _)).getOrElse("") +
+            "," + hostFields(b.host)).getOrElse("") + "}"
+    }.mkString("{", ",", "}")
+    val hostObj = host.map { case (s, e) =>
+      "\"host\":{\"start\":{" + hostFields(s) + "},\"end\":{" +
+        hostFields(e) + "}},"
     }.getOrElse("")
     val total = results.filter(_.secs >= 0).map(_.secs).sum
     // environment fields make warm-vs-cold harness deltas explainable
@@ -678,9 +322,9 @@ object Bench {
     // the final ~2 kB of stdout, so the end of this line is the only
     // part guaranteed to survive into the committed BENCH_r*.json:
     //   - "queries" goes as close to the end as a big object can,
-    //     after every other OBJECT. r12 emitted it before
-    //     "retimed"/"storm", whose grown receipts pushed the whole map
-    //     out of the tail and crashed BenchGuard's replay ("no
+    //     after every other OBJECT. r12 emitted it before its
+    //     breach receipts, whose growth pushed the whole map out of
+    //     the tail and crashed BenchGuard's replay ("no
     //     per-query timings found"); with the map at the end, any clip
     //     lands either inside it (the surviving pairs get a partial
     //     check) or before it only when the line fits.
@@ -692,6 +336,6 @@ object Bench {
     //     driver's metric read survives the same clip.
     // BenchGuardSpec round-trips a 241-query line through a 2 kB tail
     // clip to pin this contract.
-    s"""{"metric":"total","unit":"sec","sf":"$sfDir",$env"gc":$gcs,"errors":$errs,"retimed":$retimed,$stormObj"queries":$qs,"n_queries":${results.size},"value":${fmt(total)}}"""
+    s"""{"metric":"total","unit":"sec","sf":"$sfDir",$env"gc":$gcs,"errors":$errs,"retimed":$retimed,$hostObj"queries":$qs,"n_queries":${results.size},"value":${fmt(total)}}"""
   }
 }

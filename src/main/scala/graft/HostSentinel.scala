@@ -1,73 +1,48 @@
 package graft
 
-/** Out-of-JVM host-pressure sentinel: reads EXTERNAL CPU load straight
-  * from the kernel instead of timing a job inside the bench JVM.
+/** Out-of-JVM host-pressure readings straight from the kernel, rather
+  * than timing a job inside the bench JVM: late in a long sweep an
+  * in-JVM sentinel job absorbs the JVM's own debt (codegen cache, GC
+  * backlog) and reads ~4× with no host load (the r12 record). Two
+  * samples of kernel tick counters with a sleep between them cannot.
   *
-  * The shared-session range-sum sentinel it replaces had one confound
-  * the r12 closing sweep documented honestly: late in a 241-query
-  * sweep the sentinel job itself absorbs accumulated JVM debt (codegen
-  * cache, GC backlog), so its reading rises ~4× with no host storm —
-  * harmless only because it merely gated an extra re-time. This
-  * reading cannot absorb JVM debt by construction: it is two samples
-  * of kernel tick counters with a sleep between them, no allocation,
-  * no Spark job.
-  *
-  * Reading = fraction of total machine CPU capacity consumed by
+  * External busy = fraction of total machine CPU capacity consumed by
   * anything OTHER than this process over the window:
   *
   *   external = (Δbusy_host − Δ(utime+stime)_self) / Δtotal_host
   *
   * from `/proc/stat` (aggregate cpu line: user nice system idle iowait
-  * irq softirq steal — steal counts co-tenant hypervisor theft, the
-  * exact storm mode the bench adjudicates) and `/proc/self/stat`
-  * (fields 14/15, utime+stime across all threads of this JVM). On a
-  * quiet host this reads ~0 regardless of sweep position; during the
-  * observed co-tenant storms (queries inflated 2–10×) most of the 32
-  * cores are busy elsewhere, so it reads well above 0.35.
+  * irq softirq steal — steal counts co-tenant hypervisor theft) and
+  * `/proc/self/stat` (fields 14/15, utime+stime across all threads of
+  * this JVM). On a quiet host this reads ~0 regardless of sweep
+  * position.
   *
-  * Throws on any non-Linux / unreadable-proc condition — the caller
-  * (Bench) falls back to the in-JVM job sentinel and records which
-  * kind the artifact carries.
+  * Every reading throws on a non-Linux or unreadable-proc host; callers
+  * (Bench, graftbench) record -1 for that channel.
   */
 object HostSentinel {
 
   /** One external-busy-fraction reading over `windowMs`, in [0, 1]. */
-  def externalBusyFraction(windowMs: Long = 500): Double =
-    pressure(windowMs)._1
-
-  /** One (externalBusy, ioWait) fraction pair from a single window.
-    * ioWait is host-wide CPU-idle-on-IO — the channel a CPU-steal
-    * sentinel is blind to: an r13 sweep slowed its documents-heavy
-    * tail 1.5–3× while external CPU read ~0.03 (page-cache/IO
-    * interference, not compute). ioWait rides the artifact's
-    * checkpoint series as EVIDENCE (`*_io` labels); it does not gate —
-    * a ~0 reading under a breach says "not external CPU" without
-    * claiming the IO path was quiet at query time.
-    */
-  def pressure(windowMs: Long = 500): (Double, Double) = {
-    val (busy0, io0, total0) = hostTicks()
+  def externalBusyFraction(windowMs: Long = 500): Double = {
+    val (busy0, total0) = hostTicks()
     val self0 = selfTicks()
     Thread.sleep(windowMs)
-    val (busy1, io1, total1) = hostTicks()
+    val (busy1, total1) = hostTicks()
     val self1 = selfTicks()
     val dTotal = (total1 - total0).toDouble
     require(dTotal > 0, "no /proc/stat tick progress over the window")
-    (math.max(0.0, ((busy1 - busy0) - (self1 - self0)) / dTotal),
-      math.max(0.0, (io1 - io0) / dTotal))
+    math.max(0.0, ((busy1 - busy0) - (self1 - self0)) / dTotal)
   }
 
   /** Kernel memory-pressure stall fraction: the `some avg10` field of
     * `/proc/pressure/memory` (PSI), as a percentage in [0, 100] — the
     * share of the last 10 s in which at least one task stalled on
-    * memory (reclaim, refault, swap). This is the kernel channel for
-    * the THIRD environmental mode the r13 record documents (co-tenant
-    * memory pressure: queries inflate 2–5× with gc_ms 10–20× healthy
-    * while external-CPU and iowait both read ~0 — the n57/n89
-    * episodes). A quiet host reads 0.00; the mode that blinded both
-    * CPU channels is exactly what PSI counts. Throws when the file is
-    * absent (pre-4.20 kernels, psi=0 boot) or malformed — callers
-    * record −1 and the artifact shows the channel was unavailable
-    * rather than quiet.
+    * memory (reclaim, refault, swap). It sees the co-tenant memory
+    * pressure the CPU reading is blind to (the r13 n57/n89 episodes:
+    * queries inflated 2–5× with gc_ms 10–20× healthy while external CPU
+    * read ~0). A quiet host reads 0.00. Throws when the file is absent
+    * (pre-4.20 kernels, psi=0 boot) or malformed — callers record −1 so
+    * the artifact shows the channel was unavailable rather than quiet.
     */
   def memoryPsiAvg10(): Double = {
     val line = firstLine("/proc/pressure/memory")
@@ -77,18 +52,17 @@ object HostSentinel {
     f.stripPrefix("avg10=").toDouble
   }
 
-  /** (busy, iowait, total) jiffies from the aggregate cpu line of
-    * /proc/stat. busy excludes idle+iowait; total sums the first 8
-    * fields (through steal — guest time is already folded into user
-    * on Linux).
+  /** (busy, total) jiffies from the aggregate cpu line of /proc/stat.
+    * busy excludes idle+iowait; total sums the first 8 fields (through
+    * steal — guest time is already folded into user on Linux).
     */
-  private def hostTicks(): (Long, Long, Long) = {
+  private def hostTicks(): (Long, Long) = {
     val line = firstLine("/proc/stat")
     require(line.startsWith("cpu "), s"unexpected /proc/stat head: $line")
     val f = line.trim.split("\\s+").drop(1).take(8).map(_.toLong)
     require(f.length == 8, "short /proc/stat cpu line")
     val total = f.sum
-    (total - f(3) - f(4), f(4), total)
+    (total - f(3) - f(4), total)
   }
 
   /** utime+stime jiffies of THIS process (all threads), /proc/self/stat

@@ -11,10 +11,12 @@ package graft
 object Scratch {
   def withDir[T](prefix: String)(body: java.io.File => T): T = {
     val base = java.nio.file.Files.createTempDirectory(prefix).toFile
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(); ()
-    }
-    try body(base) finally rm(base)
+    try body(base) finally deleteTree(base)
+  }
+
+  /** Remove `f` and everything under it. */
+  def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete(); ()
   }
 }

@@ -30,9 +30,10 @@ import java.nio.file.{Files, Paths}
   * but still fail on over-budget, error, or unknown-name entries.
   */
 object BenchGuard {
-  /** Flat {"name": seconds} object parse — no JSON lib on the classpath
-    * by design (build.sbt is frozen); the two inputs are machine-written
-    * flat objects, so a pair regex is exact, not approximate.
+  /** Flat {"name": seconds} object parse. Jackson ships with the Spark
+    * jars, but the inputs are machine-written flat objects, so a pair
+    * regex is exact, and the same regex doubles as the clipped-artifact
+    * fallback below, which no JSON parser can read.
     */
   private val pair = """"([A-Za-z0-9_]+)"\s*:\s*(-?[0-9.]+)""".r
 
@@ -51,22 +52,6 @@ object BenchGuard {
     * apart again.
     */
   private[graft] val queryName = """^[cnqsw]\d+_""".r
-
-  /** Per-breach verdict shape inside the storm object's breaches map:
-    * `"name":{"sentinel":[…]…,"verdict":"…","evidence":"…"}`. Breach
-    * objects are nesting-free and keep verdict/evidence last
-    * (Bench.jsonLine pins that order), so scanning to the next
-    * `"verdict"` without crossing a closing brace is exact. A replay
-    * that finds a surviving breach over budget reports the artifact's
-    * own adjudication beside the failure — the round record then
-    * distinguishes "gate defect" from "host defect" by itself.
-    */
-  private val breachVerdict =
-    """"([A-Za-z0-9_]+)":\{"sentinel":\[[^{}]*"verdict":"([a-z_]+)"""".r
-
-  private[graft] def extractVerdicts(content: String): Map[String, String] =
-    breachVerdict.findAllMatchIn(content.replace("\\\"", "\""))
-      .map(m => m.group(1) -> m.group(2)).toMap
 
   /** The registry size the artifact's run timed (`"n_queries":N`,
     * emitted in the fixed-size suffix after the queries map so tail
@@ -111,7 +96,7 @@ object BenchGuard {
     * fallback when a clip leaves no flat query pair at all (r12's
     * committed artifact: the clip landed INSIDE "retimed" back when
     * "queries" preceded it). The confirmed timing is min(first, retry)
-    * — exactly what Bench.run records in "queries" for a retimed
+    * — exactly what Bench.confirm records in "queries" for a retimed
     * query, so a replay from these entries judges the same numbers.
     */
   private val retimedPair =
@@ -130,9 +115,11 @@ object BenchGuard {
     *   3. still nothing → the retimed entries' min(first, retry).
     * Returns EMPTY (never throws) when no fallback finds a timing —
     * the caller owns the clean-failure message (the r12 `require`
-    * here turned an unreplayable artifact into a stack trace).
+    * here turned an unreplayable artifact into a stack trace). Which
+    * fallback ran goes to `note`.
     */
-  private[graft] def extractQueries(content: String): Map[String, Double] = {
+  private[graft] def extractQueries(content: String,
+      note: String => Unit = println): Map[String, Double] = {
     val norm = content.replace("\\\"", "\"")
     val start = norm.indexOf("\"queries\":{")
     val open = if (start >= 0) norm.indexOf('{', start) else -1
@@ -151,7 +138,7 @@ object BenchGuard {
         // smaller-than-real timing would silently pass an over-budget
         // query. (Head clips can't fabricate a pair — the name regex
         // requires its opening quote.)
-        println("BenchGuard: artifact truncated around \"queries\" — " +
+        note("BenchGuard: artifact truncated around \"queries\" — " +
           "checking every query-shaped name:number pair found")
         pair.findAllMatchIn(norm)
           .filter(_.end < norm.length)
@@ -162,7 +149,7 @@ object BenchGuard {
     val qs = flat.view.filterKeys(queryName.findFirstIn(_).isDefined).toMap
     if (qs.nonEmpty) qs
     else {
-      println("BenchGuard: no flat query pair survived the clip — " +
+      note("BenchGuard: no flat query pair survived the clip — " +
         "falling back to retimed first/retry entries")
       retimedPair.findAllMatchIn(norm)
         .filter(_.end < norm.length)
@@ -173,61 +160,23 @@ object BenchGuard {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val budgetFile = "bench_budget.json"
-    val budgets = parseFlat(Files.readString(Paths.get(budgetFile)))
-    require(budgets.nonEmpty, s"$budgetFile parsed empty")
-    val registry = SparkEntry.queries.keySet
-
-    val (times, errors, replay, verdicts, nQueries) = args.headOption match {
-      case Some(artifact) =>
-        val content = Files.readString(Paths.get(artifact))
-        val qs = extractQueries(content)
-        if (qs.isEmpty) {
-          // a clean verdict, never a stack trace: the clipped round
-          // artifact carries no timings in any recoverable shape — the
-          // full-file copy is the replayable record
-          println(s"BenchGuard FAIL: no per-query timings found in " +
-            s"clipped artifact $artifact — replay the full-file " +
-            "bench_last.json instead")
-          sys.exit(1)
-        }
-        (qs, Map.empty[String, String], true, extractVerdicts(content),
-          extractNQueries(content))
-      case None =>
-        val sfDir =
-          sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-        val spark = GraftSession.build("graft-bench-guard")
-        // Bench.run is SELF-CONFIRMING since round 7: any first-pass
-        // timing over its committed ceiling is re-timed once in
-        // isolation inside run() itself and the minimum kept (the
-        // BenchOne min-of-reps policy) — so the driver's Bench main and
-        // this gate adjudicate noise flaps identically, and the
-        // artifact's "retimed" object records both numbers.
-        val (results, meta) = try Bench.runWithMeta(spark, sfDir)
-          finally spark.stop()
-        // emit the bench artifact too — the timing run that backs the
-        // verdict should never be thrown away; the file copy survives
-        // stdout clipping (see Bench.writeArtifact)
-        val line = Bench.jsonLine(results, sfDir, Some(meta))
-        println(line)
-        Bench.writeArtifact(line)
-        (results.map(r => r.name -> r.secs).toMap,
-          results.collect { case t if t.err.isDefined => t.name -> t.err.get }
-            .toMap, false,
-          results.collect {
-            case t if t.storm.exists(_.verdict.isDefined) =>
-              t.name -> t.storm.get.verdict.get
-          }.toMap, results.size)
-    }
-
+  /** The gate: the output lines and whether they pass. `replayed`
+    * names the artifact a replay read; a replay is checked on the
+    * budget ∩ artifact intersection (an older artifact legitimately
+    * predates new queries), a live run also on budget/registry drift.
+    * `nQueries` is the artifact's own registry size (−1 when absent).
+    */
+  private[graft] def check(budgets: Map[String, Double],
+      times: Map[String, Double], errors: Map[String, String],
+      replayed: Option[String], nQueries: Int,
+      registry: Set[String]): (Seq[String], Boolean) = {
     val problems = Seq.newBuilder[String]
-    if (replay) {
+    if (replayed.isDefined) {
       (times.keySet -- budgets.keySet).toSeq.sorted.foreach(n =>
         problems += s"artifact entry $n has no budget (unknown query?)")
     } else {
       (registry -- budgets.keySet).toSeq.sorted.foreach(n =>
-        problems += s"registered query $n has no budget — add it to $budgetFile")
+        problems += s"registered query $n has no budget — add it to $BudgetFile")
       (budgets.keySet -- registry).toSeq.sorted.foreach(n =>
         problems += s"stale budget $n — query no longer registered")
     }
@@ -236,12 +185,9 @@ object BenchGuard {
       budgets.get(n).foreach { b =>
         if (t < 0) problems += s"$n recorded -1 (failed)"
         else if (t > b)
-          problems += f"$n OVER BUDGET: ${t}%.2fs > ceiling ${b}%.2fs" +
-            verdicts.get(n).map(v =>
-              s" — artifact verdict: $v").getOrElse("")
+          problems += f"$n OVER BUDGET: ${t}%.2fs > ceiling ${b}%.2fs"
       }
     }
-
     val out = problems.result()
     val checked = times.keySet.intersect(budgets.keySet).size
     // coverage denominator: the artifact's own n_queries when it
@@ -249,13 +195,64 @@ object BenchGuard {
     // full-file artifact may legitimately predate new queries, so the
     // registry is only a fallback label, never a drift failure here
     val total = if (nQueries > 0) nQueries else registry.size
-    if (out.isEmpty) {
-      println(passLine(checked, total,
-        if (replay) Some(args.head) else None))
-    } else {
-      out.foreach(p => println(s"BenchGuard FAIL: $p"))
-      println(failLine(out.size, checked, total))
-      sys.exit(1)
+    if (out.isEmpty) (Seq(passLine(checked, total, replayed)), true)
+    else (out.map(p => s"BenchGuard FAIL: $p") :+
+      failLine(out.size, checked, total), false)
+  }
+
+  /** Replay one committed artifact (`content` of file `artifact`). */
+  private[graft] def replay(artifact: String, content: String,
+      budgets: Map[String, Double],
+      registry: Set[String]): (Seq[String], Boolean) = {
+    val notes = Seq.newBuilder[String]
+    val qs = extractQueries(content, notes += _)
+    // a clean verdict, never a stack trace: the clipped round artifact
+    // carries no timings in any recoverable shape — the full-file copy
+    // is the replayable record
+    if (qs.isEmpty)
+      (notes.result() :+ (s"BenchGuard FAIL: no per-query timings found " +
+        s"in clipped artifact $artifact — replay the full-file " +
+        "bench_last.json instead"), false)
+    else {
+      val (lines, pass) = check(budgets, qs, Map.empty, Some(artifact),
+        extractNQueries(content), registry)
+      (notes.result() ++ lines, pass)
     }
+  }
+
+  private val BudgetFile = "bench_budget.json"
+
+  def main(args: Array[String]): Unit = {
+    val budgets = parseFlat(Files.readString(Paths.get(BudgetFile)))
+    require(budgets.nonEmpty, s"$BudgetFile parsed empty")
+    val registry = SparkEntry.queries.keySet
+    val (lines, pass) = args.headOption match {
+      case Some(artifact) =>
+        replay(artifact, Files.readString(Paths.get(artifact)), budgets,
+          registry)
+      case None =>
+        val sfDir =
+          sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+        val spark = GraftSession.build("graft-bench-guard")
+        // Bench.run is SELF-CONFIRMING: a first-pass timing over its
+        // committed ceiling goes through Bench.confirm inside run()
+        // itself, so Bench's own main and this gate judge noise
+        // flaps identically, and the artifact's "retimed" object
+        // records every number.
+        val sweep = try Bench.run(spark, sfDir) finally spark.stop()
+        // emit the bench artifact too — the timing run that backs the
+        // verdict should never be thrown away; the file copy survives
+        // stdout clipping (see Bench.writeArtifact)
+        val line = Bench.jsonLine(sweep.timings, sfDir,
+          Some((sweep.start, sweep.end)))
+        println(line)
+        Bench.writeArtifact(line)
+        val results = sweep.timings
+        check(budgets, results.map(r => r.name -> r.secs).toMap,
+          results.collect { case t if t.err.isDefined => t.name -> t.err.get }
+            .toMap, None, results.size, registry)
+    }
+    lines.foreach(println)
+    if (!pass) sys.exit(1)
   }
 }

@@ -9,8 +9,11 @@ import graft.queries.{Registry, StreamingQueries}
   * the memory-sink LocalTableScan the registered run returns — the
   * registered streaming run executes the stream and its returned frame
   * says nothing about the computation. Used to produce the committed
-  * plan evidence under the plans/ directory.
-  * Run: sbt "runMain graft.tools.PlanDump [sfDir] query [query ...]"
+  * plan evidence under the plans/ directory. With no query names it
+  * prints a default audit set: scan pruning (`ReadSchema`), predicate
+  * pushdown (`PushedFilters`), join strategy and whole-stage-codegen
+  * coverage across the query families.
+  * Run: sbt "runMain graft.tools.PlanDump [--executed] [sfDir] [query ...]"
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -22,7 +25,10 @@ object PlanDump {
     val executed = args.contains("--executed")
     val rest = args.filterNot(_ == "--executed")
     val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = rest.tail.toSeq
+    val names = if (rest.length > 1) rest.tail.toSeq
+      else Seq("q01_pricing_summary", "q02_join_agg", "q03_multi_join",
+        "c02_filter", "w01_tumbling_window", "n03_dedup_minhash_lsh",
+        "n27_dup_ngram_coverage", "n31_semdedup", "q36_salted_join")
     val spark = GraftSession.build("graft-plandump")
     // audit frames are batch plans over streaming-shaped lineage
     spark.conf.set("spark.sql.streaming.unsupportedOperationCheck", "false")

@@ -60,12 +60,14 @@ class BenchGuardSpec extends AnyFunSuite {
 
   test("round-trip: a 241-query jsonLine clipped to its last 2kB still yields timings") {
     // the r12 failure, pinned: the driver keeps only the final ~2 kB of
-    // stdout, and that round's grown retimed+storm receipts pushed the
-    // whole queries map out of the tail — BenchGuard crashed on the
-    // committed artifact. The key-order contract (queries second-to-
-    // last, value last) means ANY tail clip now lands inside the
-    // queries map; this round-trips a registry-sized line with
-    // r12-sized receipts through exactly that clip.
+    // stdout, and that round's grown breach receipts pushed the whole
+    // queries map out of the tail — BenchGuard crashed on the committed
+    // artifact. The key-order contract (queries second-to-last, value
+    // last) means ANY tail clip now lands inside the queries map; this
+    // round-trips a registry-sized line through exactly that clip, with
+    // 12 retimed entries each carrying the full breach evidence
+    // (retry2, its GC probe, host readings) — at ~250 bytes apiece
+    // about the size of r12's receipts.
     val plain = (1 to 229).map(i =>
       Bench.Timing(f"n$i%03d_synthetic_query_name", i / 100.0))
     val probe = Some(Bench.GcProbe(12345, 5.678))
@@ -73,13 +75,15 @@ class BenchGuardSpec extends AnyFunSuite {
       Bench.Timing(f"s$i%02d_retimed_query_name", 2.0,
         firstPass = Some(9.987), retry = Some(2.0),
         gc = probe, retryGc = probe,
-        storm = Some(Bench.StormEvidence(Seq(0.648, 0.871, 0.112), 2,
-          Some(2.0)))))
-    val meta = Bench.SweepMeta("proc_external_busy", 0.021,
-      Seq(0.021, 0.034, 0.029),
-      Seq("start" -> 0.02, "mid" -> 0.31, "end" -> 0.025))
+        breach = Some(Bench.Breach(2.5, probe,
+          Bench.HostReading(0.648, 12.34)))))
+    val host = Some((Bench.HostReading(0.021, 0.0),
+      Bench.HostReading(-1.0, -1.0)))
     val results = plain ++ flapped
-    val line = Bench.jsonLine(results, "/root/testdata/sf0.1", Some(meta))
+    val line = Bench.jsonLine(results, "/data/sf0.1", host)
+    assert(line.contains("\"retry2\":2.500,\"retry2_gc_ms\":12345"))
+    assert(line.contains("\"ext_busy\":0.648,\"mem_psi\":12.340}"))
+    assert(line.contains("\"end\":{\"ext_busy\":-1,\"mem_psi\":-1}"))
     val full = BenchGuard.extractQueries(line)
     assert(full.size == results.size, "full line must carry every query")
     val clipped = line.takeRight(2048)
@@ -92,6 +96,12 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(recovered.contains(results.last.name))
     // and the driver's headline metric survives alongside
     assert(clipped.contains("\"value\":"))
+    assert(BenchGuard.extractNQueries(clipped) == results.size)
+    // the retimed entries alone still give the confirmed values
+    val retimedOnly = line.substring(line.indexOf("\"retimed\":"),
+      line.indexOf("\"host\":"))
+    assert(BenchGuard.extractQueries(retimedOnly, _ => ()) ==
+      flapped.map(t => t.name -> t.secs).toMap)
   }
 
   test("n_queries survives any tail clip and labels partial replays") {
@@ -131,111 +141,12 @@ class BenchGuardSpec extends AnyFunSuite {
       "BenchGuard: 1 problem(s) across 268/268 checked queries")
   }
 
-  test("extractVerdicts reads per-breach adjudications out of the storm object") {
-    val flapped = Bench.Timing("n57_dedup_keep_best", 33.66,
-      firstPass = Some(33.66), retry = Some(45.64),
-      gc = Some(Bench.GcProbe(210, 4.1)),
-      retryGc = Some(Bench.GcProbe(5310, 9.8)),
-      storm = Some(Bench.StormEvidence(
-        Seq(0.0, 0.001), 0, None, Seq(0.0, 0.0), Seq(4.2, 0.1),
-        retry2 = Some(41.2), retry2Gc = Some(Bench.GcProbe(4900, 9.1)),
-        verdict = Some("environmental_suspected"),
-        evidence = Some("kernel memory PSI avg10 4.20% during breach"))))
-    val quiet = Bench.Timing("n22_ok", 2.0, firstPass = Some(9.0),
-      retry = Some(2.0), storm = Some(Bench.StormEvidence(
-        Seq(0.0), 0, None, Seq(0.0), Seq(0.0), retry2 = Some(2.0))))
-    val line = Bench.jsonLine(Seq(flapped, quiet), "/sf",
-      Some(Bench.SweepMeta("proc_external_busy", 0.0, Seq(0.0),
-        Seq("start" -> 0.0, "start_io" -> 0.0, "start_mem" -> 0.0))))
-    assert(BenchGuard.extractVerdicts(line) ==
-      Map("n57_dedup_keep_best" -> "environmental_suspected"),
-      "only the surviving breach carries a verdict; the rescued flap " +
-        "must not inherit its neighbor's")
-    // the verdict fields must not corrupt timing extraction
-    assert(BenchGuard.extractQueries(line) ==
-      Map("n57_dedup_keep_best" -> 33.66, "n22_ok" -> 2.0))
-  }
-
-  test("adjudicateBreach: the four environmental signals and the regression default") {
-    def verdict(times: Seq[Double] = Seq(10.0, 10.5), gcMs: Long = 300,
-        wall: Double = 10.0, ext: Double = 0.01, psi: Double = 0.0,
-        stormed: Boolean = false): String =
-      Bench.adjudicateBreach(times, gcMs, wall, ext, psi, stormed)._1
-    // 1. CPU storm observed
-    assert(verdict(ext = 0.82, stormed = true) == "environmental_suspected")
-    // 2. kernel memory PSI — the r13 n57 mode's missing signal
-    assert(verdict(psi = 4.2) == "environmental_suspected")
-    // 3. gc-bound retry — the n89 fingerprint (5.65s GC on 43s wall)
-    assert(verdict(times = Seq(48.0, 43.1), gcMs = 5651, wall = 43.1)
-      == "environmental_suspected")
-    // 4. unstable retries under quiet sentinels
-    assert(verdict(times = Seq(33.7, 45.6, 12.1)) ==
-      "environmental_suspected")
-    // default: quiet host, stable timings, healthy gc → the code owns it
-    assert(verdict() == "regression_suspected")
-    // small-but-real gc on a short query is NOT the memory fingerprint
-    assert(verdict(times = Seq(4.0, 4.1), gcMs = 900, wall = 4.0) ==
-      "regression_suspected")
-  }
-
-  test("adjudicateBreach rule 5: the r14 s33 false-regression episode") {
-    // the driver's closing r14 sweep, verbatim: s33 timings
-    // {5.32, 3.53, 5.91}, gc 170 ms, ext 0.027, psi 0, no storm —
-    // spread 1.67x slipped under rule 4 and the round record shipped
-    // regression_suspected while the committed bench_last.json read
-    // 1.40 s one lookup away (judge cold re-time: 1.52 s)
-    val (v, e) = Bench.adjudicateBreach(Seq(5.32, 3.53, 5.91), 170, 3.53,
-      0.027, 0.0, stormed = false, healthy = Some(1.40))
-    assert(v == "environmental_suspected", e)
-    assert(e.contains("bench_last.json") && e.contains("1.40"), e)
-    // without the on-disk evidence the same inputs still default to the
-    // plan — the new RULE, not a threshold retune, flips the verdict
-    assert(Bench.adjudicateBreach(Seq(5.32, 3.53, 5.91), 170, 3.53,
-      0.027, 0.0, stormed = false)._1 == "regression_suspected")
-    // a STABLE slow reproduction stays a regression even when the
-    // committed reading is far lower: spread ~1.0 fails the wobble
-    // guard (a real plan change reproduces at a stable slow time)
-    assert(Bench.adjudicateBreach(Seq(7.0, 7.1, 6.9), 170, 6.9,
-      0.01, 0.0, stormed = false, healthy = Some(3.4))._1 ==
-      "regression_suspected")
-    // marginal breach inside 1.8x of the committed reading: the band
-    // does not excuse it — ceiling derivation owns honest margins
-    assert(Bench.adjudicateBreach(Seq(3.6, 3.5, 3.6), 170, 3.5,
-      0.01, 0.0, stormed = false, healthy = Some(3.0))._1 ==
-      "regression_suspected")
-  }
-
-  test("adjudicateBreach rule 5: the r15 s27 degraded-sweep episode") {
-    // the r15 failing sweep, verbatim: s27 {21.18, 21.63} — STABLE
-    // (spread 1.1x, so the healthy-band wobble guard rightly refuses),
-    // quiet sentinels, committed reading 11.44 — inside a sweep whose
-    // median completed query ran ~1.3x its committed reading (total
-    // 607s vs 450s; q01 4.26 vs 2.96). Judge-style fresh-JVM cold
-    // min-of-3 immediately after: 11.0s. The sweep-pace channel is the
-    // evidence that separates a persistent degraded window from a
-    // genuine stable regression.
-    val (v, e) = Bench.adjudicateBreach(Seq(21.18, 21.63), 1254, 21.18,
-      0.035, 0.0, stormed = false, healthy = Some(11.44),
-      sweepMedianRatio = Some(1.30))
-    assert(v == "environmental_suspected", e)
-    assert(e.contains("degraded sweep") && e.contains("1.30"), e)
-    // the SAME stable inputs in a healthy-pace sweep stay a regression
-    // — a real single-query regression cannot move the sweep median
-    assert(Bench.adjudicateBreach(Seq(21.18, 21.63), 1254, 21.18,
-      0.035, 0.0, stormed = false, healthy = Some(11.44),
-      sweepMedianRatio = Some(1.02))._1 == "regression_suspected")
-    // and with no pace evidence at all (< 20 samples) the default holds
-    assert(Bench.adjudicateBreach(Seq(21.18, 21.63), 1254, 21.18,
-      0.035, 0.0, stormed = false, healthy = Some(11.44))._1 ==
-      "regression_suspected")
-  }
-
   test("a clip with no flat query pair falls back to retimed first/retry minima") {
     // the r12 committed-artifact shape: the tail window held only the
     // retimed object — name:{...} entries the flat-pair regex correctly
     // refuses. The last-resort fallback reads min(first, retry), which
-    // is exactly the confirmed value Bench.run recorded in "queries".
-    val tail = """st_gc_ms":512},"retimed":{"n58_three_stage_curation":{"first":108.7,"retry":12.1,"first_gc_ms":88},"w03_session_windows":{"first":5.04,"retry":3.02}},"storm":{"kind":"jvm_range_sum","baseline":0.112}"""
+    // is exactly the confirmed value Bench.confirm recorded in "queries".
+    val tail = """st_gc_ms":512},"retimed":{"n58_three_stage_curation":{"first":108.7,"retry":12.1,"first_gc_ms":88},"w03_session_windows":{"first":5.04,"retry":3.02}},"storm":{"baseline":0.112,"baseline_readings":[0.466,0.123,0.112]}"""
     assert(BenchGuard.extractQueries(tail) == Map(
       "n58_three_stage_curation" -> 12.1, "w03_session_windows" -> 3.02))
   }
@@ -244,5 +155,65 @@ class BenchGuardSpec extends AnyFunSuite {
     // the caller (main) owns the clean-failure exit; the r12 `require`
     // here turned an unreplayable artifact into a stack trace
     assert(BenchGuard.extractQueries("""{"n": 4, "rc": 0}""").isEmpty)
+  }
+
+  test("every committed artifact replays to its pinned verdict") {
+    // pass/fail and the flagged queries of each committed artifact
+    // against bench_budget.json; a ceiling change updates these pins
+    // in the same commit
+    val pinned = Map(
+      "BENCH_r01.json" -> (false, Set("q02_join_agg", "q03_multi_join",
+        "q04_semi_join", "q10_count_distinct")),
+      "BENCH_r02.json" -> (false, Set("c05_fold_global_agg", "q02_join_agg",
+        "q03_multi_join", "q06_outer_join")),
+      "BENCH_r03.json" -> (false, Set("n19_repetition_stats",
+        "q01_pricing_summary", "s05_stream_from_queue")),
+      "BENCH_r04.json" -> (true, Set.empty[String]),
+      "BENCH_r05.json" -> (true, Set.empty[String]),
+      "BENCH_r06.json" -> (false, Set("s19_stream_importance_gate")),
+      "BENCH_r07.json" -> (false, Set("n34_leakage_safe_split",
+        "n43_pagerank", "n57_dedup_keep_best")),
+      "BENCH_r08.json" -> (false, Set("s19_stream_importance_gate",
+        "s21_stream_quality_gate")),
+      "BENCH_r09.json" -> (false, Set("s19_stream_importance_gate",
+        "s21_stream_quality_gate", "s27_stream_reward_gate")),
+      "BENCH_r10.json" -> (false, Set("s19_stream_importance_gate",
+        "s21_stream_quality_gate", "s27_stream_reward_gate")),
+      "BENCH_r11.json" -> (false, Set("s19_stream_importance_gate",
+        "s21_stream_quality_gate", "s27_stream_reward_gate")),
+      "BENCH_r12.json" -> (false, Set("s27_stream_reward_gate")),
+      "BENCH_r13.json" -> (false, Set("s19_stream_importance_gate",
+        "s21_stream_quality_gate", "s27_stream_reward_gate")),
+      "BENCH_r14.json" -> (false, Set("n140_group_advantage",
+        "n142_zca_whitening", "n144_dup_size_histogram",
+        "s19_stream_importance_gate", "s21_stream_quality_gate",
+        "s27_stream_reward_gate", "s33_stream_ks_monitor")),
+      "BENCH_r15.json" -> (false, Set("n140_group_advantage",
+        "n144_dup_size_histogram", "n145_conformal_gate",
+        "n148_best_of_k_uplift", "n154_pass_at_k",
+        "s27_stream_reward_gate", "s44_stream_passk_monitor")),
+      "BENCH_r16.json" -> (true, Set.empty[String]),
+      "BENCH_r17.json" -> (true, Set.empty[String]),
+      "BENCH_r17_c8.json" -> (true, Set.empty[String]),
+      "BENCH_r18.json" -> (true, Set.empty[String]),
+      "BENCH_r18_c8.json" -> (true, Set.empty[String]),
+      "bench_last.json" -> (true, Set.empty[String]))
+    def read(f: String) =
+      java.nio.file.Files.readString(java.nio.file.Paths.get(f))
+    val committed = new java.io.File(".").list().toSeq
+      .filter(f => f.matches("BENCH_r.*\\.json") || f == "bench_last.json")
+    assert(committed.toSet == pinned.keySet,
+      "every committed artifact carries a pin")
+    val budgets = BenchGuard.parseFlat(read("bench_budget.json"))
+    val flaggedName = """BenchGuard FAIL: ([cnqsw]\d+_\w+)""".r.unanchored
+    pinned.toSeq.sortBy(_._1).foreach { case (f, (pass, flagged)) =>
+      val (lines, ok) = BenchGuard.replay(f, read(f), budgets,
+        SparkEntry.queries.keySet)
+      assert(ok == pass, s"$f: ${lines.mkString("\n")}")
+      assert(lines.collect { case flaggedName(n) => n }.toSet == flagged,
+        s"$f: ${lines.mkString("\n")}")
+      assert(lines.last.startsWith(
+        if (pass) "BenchGuard PASS" else "BenchGuard: "), f)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The r18 hash-bucketed standing-state layout
@@ -10,16 +11,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * layout-compatible with the multi-bucket path, and the probe must
   * physically read only the probed bucket directories.
   */
-class BucketedStateSpec extends AnyFunSuite {
+class BucketedStateSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val spark = TestSpark.spark
   import spark.implicits._
 
-  private def tmp(): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory("graft_bucket_spec_").toFile
-    d.deleteOnExit()
-    new java.io.File(d, "state").getAbsolutePath
-  }
+  private val root = java.nio.file.Files
+    .createTempDirectory("graft_bucket_spec_")
+
+  override def afterAll(): Unit = Scratch.deleteTree(root.toFile)
+
+  private val dirs = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** A fresh, not yet existing state dir (kept short: the probe test
+    * reads bucket names out of the plan's abbreviated scan location).
+    */
+  private def tmp(): String =
+    new java.io.File(root.toFile, s"s${dirs.incrementAndGet()}")
+      .getAbsolutePath
 
   private val D = graft.operators.Dedup
 

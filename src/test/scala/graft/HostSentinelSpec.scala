@@ -11,12 +11,14 @@ class HostSentinelSpec extends AnyFunSuite {
 
   test("pressure reads both channels as fractions in [0, 1]") {
     // this container is Linux — /proc must be readable and both
-    // channels must be normalized fractions; a tick-parsing slip
-    // (wrong column, missing self subtraction) shows up as a value
-    // outside the unit interval or an exception
-    val (ext, io) = HostSentinel.pressure(200)
+    // channels (external CPU, memory PSI as a share of 100) must be
+    // normalized fractions; a tick-parsing slip (wrong column, missing
+    // self subtraction) shows up as a value outside the unit interval
+    // or an exception
+    val ext = HostSentinel.externalBusyFraction(200)
     assert(ext >= 0.0 && ext <= 1.0, s"external busy out of range: $ext")
-    assert(io >= 0.0 && io <= 1.0, s"iowait out of range: $io")
+    val mem = HostSentinel.memoryPsiAvg10() / 100
+    assert(mem >= 0.0 && mem <= 1.0, s"memory PSI out of range: $mem")
   }
 
   test("this process's own CPU burn does not read as external pressure") {
@@ -25,10 +27,10 @@ class HostSentinelSpec extends AnyFunSuite {
     // host busy is high — the property that lets the sentinel read
     // mid-sweep without the bench JVM polluting it
     // precondition: a host already under genuine co-tenant load (the
-    // exact storm mode the sentinel exists to DETECT) would fail the
+    // exact load the reading exists to SEE) would fail the
     // assertion below even though HostSentinel is correct — skip with
     // assume() rather than make `sbt test` environment-flaky
-    val (pre, _) = HostSentinel.pressure(300)
+    val pre = HostSentinel.externalBusyFraction(300)
     assume(pre < 0.20,
       f"host already $pre%.3f externally busy — self-burn test " +
         "unmeasurable under real external load; skipping")
@@ -42,11 +44,11 @@ class HostSentinelSpec extends AnyFunSuite {
         t.setDaemon(true); t.start(); t
       }
     try {
-      val (ext, _) = HostSentinel.pressure(500)
+      val ext = HostSentinel.externalBusyFraction(500)
       assert(ext < pre + 0.35,
         f"own CPU burn leaked into the external reading: $ext%.3f " +
           f"(quiet-host precondition read $pre%.3f — the burn would " +
-          "self-trigger storm detection)")
+          "read the bench JVM as host load)")
     } finally {
       stop.set(true)
       threads.foreach(_.join(1000))

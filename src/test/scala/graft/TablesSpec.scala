@@ -6,6 +6,7 @@ import java.nio.file.{Files, StandardCopyOption}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The per-session relation cache behind `Tables`: a repeated read
@@ -13,19 +14,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * gets fresh attribute ids, and entries never cross sessions or
   * outlive their application.
   */
-class TablesSpec extends AnyFunSuite {
+class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val spark = TestSpark.spark
   private val src = "/root/testdata/sf0.001"
 
+  /** Every file this suite writes lives under here. */
+  private val root = Files.createTempDirectory("graft_tables_spec_")
+
+  override def afterAll(): Unit = Scratch.deleteTree(root.toFile)
+
   /** A private copy of some tables, so no other suite has cached them. */
   private def copyOf(tables: String*): String = {
-    val d = Files.createTempDirectory("graft_tables_spec_").toFile
-    d.deleteOnExit()
+    val d = Files.createTempDirectory(root, "copy_").toFile
     tables.foreach { t =>
       val f = new File(d, s"$t.parquet")
       Files.copy(new File(s"$src/$t.parquet").toPath, f.toPath)
       f.setWritable(true)
-      f.deleteOnExit()
     }
     d.getAbsolutePath
   }
@@ -71,7 +75,7 @@ class TablesSpec extends AnyFunSuite {
     // a larger file with another schema, written elsewhere and moved
     // over the table: new length and a later mtime. A stale relation
     // would read it under the old schema and the old file length.
-    val tmp = Files.createTempDirectory("graft_tables_new_").toFile
+    val tmp = Files.createTempDirectory(root, "new_").toFile
     spark.range(0, 5000)
       .select(col("id").as("n_nationkey"), lit("x").as("n_name"))
       .coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
