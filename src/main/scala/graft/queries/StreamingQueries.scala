@@ -115,12 +115,17 @@ object StreamingQueries extends QueryGroup {
     * "Streaming state-partition sizing").
     */
   private[graft] def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(8, prevShuffle.toInt).toString)
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val key = "spark.sql.shuffle.partitions"
+    graft.GraftSession.withConf(spark,
+      key -> math.min(8, spark.conf.get(key).toInt).toString)(body)
   }
+
+  /** Runs `body` on the RocksDB state store provider, which
+    * `transformWithState` requires (s13/s14). */
+  private[graft] def withRocksDb[T](spark: SparkSession)(body: => T): T =
+    graft.GraftSession.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** The staged-stream run (s20/s22/s25/s31): in one scratch dir and
     * under the state-partition policy, `df` is staged as arrival
@@ -1319,28 +1324,15 @@ object StreamingQueries extends QueryGroup {
   /** The Spark 4 arbitrary-state API (`transformWithState`,
     * successor to s09's `mapGroupsWithState`): running per-user
     * (count, max) via an explicit named ValueState. The API requires
-    * the RocksDB state store provider — swapped in for this query the
-    * same way runToTable scopes its shuffle-partition override; the
-    * provider is itself the scale story (changelog-checkpointed state
-    * off the executor heap).
+    * the RocksDB state store provider — swapped in for this query by
+    * [[withRocksDb]]; the provider is itself the scale story
+    * (changelog-checkpointed state off the executor heap).
     */
   private val streamTws = Q(
     "s13_stream_transform_with_state",
     "transformWithState running per-user (count, max) == relational agg",
-    (s, dir) => {
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        runToTable(Frames.s13(s, dir), "update").orderBy("user_id")
-      } finally {
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
+    (s, dir) => withRocksDb(s) {
+      runToTable(Frames.s13(s, dir), "update").orderBy("user_id")
     },
     Some("""SELECT user_id, COUNT(*) AS n, MAX(value) AS max_value
             FROM events GROUP BY user_id ORDER BY user_id"""))
@@ -1355,21 +1347,9 @@ object StreamingQueries extends QueryGroup {
   private val streamTimerSessions = Q(
     "s14_stream_timer_sessions",
     "timer-driven sessionization (transformWithState) == session_window",
-    (s, dir) => {
-      val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        runToTable(Frames.s14(s, dir), "append")
-          .orderBy("user_id", "session_start")
-      } finally {
-        prev match {
-          case Some(p) =>
-            s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None =>
-            s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-      }
+    (s, dir) => withRocksDb(s) {
+      runToTable(Frames.s14(s, dir), "append")
+        .orderBy("user_id", "session_start")
     },
     Some(s"""WITH flagged AS (
                SELECT user_id, ts, event_id, value,

@@ -21,9 +21,7 @@ class BucketingSpec extends AnyFunSuite {
       .write.bucketBy(4, "o_orderkey").sortBy("o_orderkey")
       .mode("overwrite").saveAsTable("b_orders")
 
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    try GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("b_lineitem")
         .join(spark.table("b_orders"), col("l_orderkey") === col("o_orderkey"))
       val plan = joined.queryExecution.executedPlan.toString
@@ -31,7 +29,6 @@ class BucketingSpec extends AnyFunSuite {
         s"bucketed join must not shuffle:\n${plan.take(3000)}")
       assert(joined.count() == t.lineitem.count(), "inner join keeps all lineitems")
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
       spark.sql("DROP TABLE IF EXISTS b_orders")
     }

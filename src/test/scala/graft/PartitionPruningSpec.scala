@@ -50,9 +50,8 @@ class PartitionPruningSpec extends AnyFunSuite {
       .toSeq.toDF("y", "label").write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir)
 
-    val prev = spark.conf.get("spark.sql.optimizer.dynamicPartitionPruning.enabled")
-    spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "true")
-    try {
+    GraftSession.withConf(spark,
+        "spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "true") {
       val joined = spark.read.parquet(dir)
         .join(dim.filter(col("label") === "pick"), "y")
       val plan = joined.queryExecution.executedPlan.toString
@@ -60,8 +59,6 @@ class PartitionPruningSpec extends AnyFunSuite {
         s"fact scan must carry a dynamicpruning subquery:\n${plan.take(1500)}")
       val want = fact.filter(col("y") === years.head).count()
       assert(joined.count() == want)
-    } finally {
-      spark.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", prev)
     }
   }
 }

@@ -30,22 +30,21 @@ class PlanQualitySpec extends AnyFunSuite {
     */
   private def planOf(name: String,
       df: org.apache.spark.sql.DataFrame): (String, Int, Seq[Long]) = {
-    val prev = spark.conf.get("spark.sql.streaming.unsupportedOperationCheck")
-    spark.conf.set("spark.sql.streaming.unsupportedOperationCheck", "false")
-    try {
-      val qe = df.queryExecution
-      val partitionlessWindows = qe.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-            if w.partitionSpec.isEmpty => w
-      }.size
-      val plan = qe.executedPlan.toString
-      val limits = limitRe.findAllMatchIn(plan).map(_.group(1).toLong).toSeq
-      (plan, partitionlessWindows, limits)
-    } catch {
-      case e: Throwable =>
-        fail(s"$name: could not plan the audit frame: $e")
-    } finally {
-      spark.conf.set("spark.sql.streaming.unsupportedOperationCheck", prev)
+    GraftSession.withConf(spark,
+        "spark.sql.streaming.unsupportedOperationCheck" -> "false") {
+      try {
+        val qe = df.queryExecution
+        val partitionlessWindows = qe.optimizedPlan.collect {
+          case w: org.apache.spark.sql.catalyst.plans.logical.Window
+              if w.partitionSpec.isEmpty => w
+        }.size
+        val plan = qe.executedPlan.toString
+        val limits = limitRe.findAllMatchIn(plan).map(_.group(1).toLong).toSeq
+        (plan, partitionlessWindows, limits)
+      } catch {
+        case e: Throwable =>
+          fail(s"$name: could not plan the audit frame: $e")
+      }
     }
   }
 

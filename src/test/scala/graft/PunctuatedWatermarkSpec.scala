@@ -83,9 +83,7 @@ class PunctuatedWatermarkSpec extends AnyFunSuite {
     // (the driver's sf0.01 gate passed; sf0.1 caught it), so this spec
     // pins the contract with AQE off, where the old shape reproducibly
     // emitted nothing.
-    val prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       val nKeys = 500
       val rows = for (k <- 0 until nKeys; i <- 0 until 7)
         yield (k.toLong, (k * 100 + i).toDouble, i.toLong * 3 + 1,
@@ -105,7 +103,7 @@ class PunctuatedWatermarkSpec extends AnyFunSuite {
         Win(k, 0L, 5L, Seq(12300.0, 12301.0), 7L),
         Win(k, 5L, 10L, Seq(12302.0), 16L),
         Win(k, 10L, 15L, Seq(12303.0, 12304.0), 16L)))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
   }
 
   test("one watermark emits every closed window in ascending start order") {

@@ -42,25 +42,14 @@ class RuntimeFilterSpec extends AnyFunSuite {
     // simulate the fact⋈fact planner choice (no broadcast candidates)
     // and a fact scan big enough to be worth filtering; restore the
     // session conf afterwards — TestSpark is shared
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevScan = spark.conf.get(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "0")
-    val (optimized, rows) =
-      try {
-        val plan = selectiveDimJoin().queryExecution.optimizedPlan
-        val r = selectiveDimJoin().orderBy("p_brand")
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        (plan, r)
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-        spark.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-          prevScan)
-      }
+    val (optimized, rows) = GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0") {
+      val plan = selectiveDimJoin().queryExecution.optimizedPlan
+      val r = selectiveDimJoin().orderBy("p_brand")
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      (plan, r)
+    }
     assert(optimized.toString.contains("bloom_filter_agg"),
       s"expected InjectRuntimeFilter to build a bloom from the dim side:\n$optimized")
     // the consumer must land on the FACT side: a Filter whose condition

@@ -175,15 +175,10 @@ class StreamingSourcesSpec extends AnyFunSuite {
     // exist in the checkpoint.
     implicit val sql = spark.sqlContext
     val chk = Files.createTempDirectory("graft-changelog-chk").toFile
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevChangelog = spark.conf.getOption(changelogKey)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set(changelogKey, "true")
-    try {
+    GraftSession.withConf(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true") {
       val input = MemoryStream[(Long, Double)]
       val agg = input.toDF().toDF("k", "v").groupBy("k")
         .agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
@@ -204,17 +199,6 @@ class StreamingSourcesSpec extends AnyFunSuite {
         else Seq(f)
       assert(walk(chk).exists(_.getName.endsWith(".changelog")),
         "no .changelog commits found — changelog checkpointing not active")
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      prevChangelog match {
-        case Some(p) => spark.conf.set(changelogKey, p)
-        case None => spark.conf.unset(changelogKey)
-      }
     }
   }
 
@@ -265,11 +249,7 @@ class StreamingSourcesSpec extends AnyFunSuite {
     }
     implicit val sql = spark.sqlContext
     val input = MemoryStream[(Long, String)]
-    val prev = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    queries.StreamingQueries.withRocksDb(spark) {
       val out = input.toDS()
         .groupByKey(_._1)(Encoders.scalaLong)
         .transformWithState(new CatStats, TimeMode.None(),
@@ -291,13 +271,6 @@ class StreamingSourcesSpec extends AnyFunSuite {
         assert(byBatch.contains((1L, 2L, 4L)),
           s"second batch must see accumulated state: $byBatch")
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -307,11 +280,7 @@ class StreamingSourcesSpec extends AnyFunSuite {
     // a timer closing a quiet user, and an active tail never emitting
     implicit val sql = spark.sqlContext
     val input = MemoryStream[(Long, Long, Double)] // (user, ts-micros, value)
-    val prev = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    queries.StreamingQueries.withRocksDb(spark) {
       val gap = 30L * 60 * 1000000 // 30 min in micros
       def mins(m: Long): Long = m * 60 * 1000000
       val ds2 = input.toDF().toDF("user_id", "tsu", "value")
@@ -359,13 +328,6 @@ class StreamingSourcesSpec extends AnyFunSuite {
         assert(rows == expected,
           s"got ${rows.toList.sorted}\nwant ${expected.toList.sorted}")
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -407,11 +369,7 @@ class StreamingSourcesSpec extends AnyFunSuite {
     // the dev default); the engine's stateful queries must run under it
     implicit val sql = spark.sqlContext
     val input = MemoryStream[(Long, Double)]
-    val prev = spark.conf
-      .getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    queries.StreamingQueries.withRocksDb(spark) {
       val agg = input.toDF().toDF("k", "v")
         .groupBy("k").agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
       val name = "graft_rocksdb_test"
@@ -424,13 +382,6 @@ class StreamingSourcesSpec extends AnyFunSuite {
           .map(r => (r.getAs[Long]("k"), r.getAs[Long]("n"), r.getAs[Double]("s")))
         assert(rows.toList == List((1L, 2L, 4.0), (2L, 1L, 2.0)))
       } finally q.stop()
-    } finally {
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 }

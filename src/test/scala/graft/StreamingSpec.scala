@@ -266,27 +266,33 @@ class StreamingSpec extends AnyFunSuite {
 
   test("runStaged: a throwing run removes its scratch tree and restores shuffle partitions") {
     val key = "spark.sql.shuffle.partitions"
+    val provider = "spark.sql.streaming.stateStore.providerClass"
     val prior = spark.conf.get(key)
+    assert(!spark.conf.getAll.contains(provider), "the suite session sets no provider")
     spark.conf.set(key, "12")
     try {
       var base: java.io.File = null
-      var during: String = null
+      var during: (String, String) = null
       val e = intercept[IllegalStateException] {
-        queries.StreamingQueries.runStaged("graft_staged_spec_",
-            spark.range(0, 10).toDF("id"), col("id") % 2, 2)(
-          (_, in) => in.writeStream.foreachBatch(
-            (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-              _: Long) => ())) { (b, _) =>
-          base = b
-          during = spark.conf.get(key)
-          assert(new java.io.File(b, "stage/k=1").isDirectory)
-          throw new IllegalStateException("boom")
+        queries.StreamingQueries.withRocksDb(spark) {
+          queries.StreamingQueries.runStaged("graft_staged_spec_",
+              spark.range(0, 10).toDF("id"), col("id") % 2, 2)(
+            (_, in) => in.writeStream.foreachBatch(
+              (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                _: Long) => ())) { (b, _) =>
+            base = b
+            during = (spark.conf.get(key), spark.conf.get(provider))
+            assert(new java.io.File(b, "stage/k=1").isDirectory)
+            throw new IllegalStateException("boom")
+          }
         }
       }
       assert(e.getMessage == "boom")
-      assert(during == "8", "state partitions: min(8, session value)")
+      assert(during._1 == "8", "state partitions: min(8, session value)")
+      assert(during._2.endsWith("RocksDBStateStoreProvider"))
       assert(base != null && !base.exists(), s"$base survived the failure")
       assert(spark.conf.get(key) == "12")
+      assert(!spark.conf.getAll.contains(provider), "the provider was left set")
     } finally spark.conf.set(key, prior)
   }
 }

@@ -13,6 +13,9 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // the engine's checkpoint I/O binding, so suites run the
+      // production path
+      .config(GraftSession.checkpointFs._1, GraftSession.checkpointFs._2)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
