@@ -228,7 +228,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // GraftSession.build = the engine's real configuration, including its
-    // optimizer rules (RewriteSizeOfSplit). A hand-rolled session here
+    // optimizer rules (GraftExtensions). A hand-rolled session here
     // would benchmark a different engine than Verify checks.
     val spark = GraftSession.build("graft-bench")
     val sweep = run(spark, sfDir)

@@ -5,6 +5,8 @@ import graft.functions.TextFunctions
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
 /** SQL registration of the engine's native expressions, both as a
@@ -57,12 +59,28 @@ object GraftFunctions {
     }
 }
 
-/** `spark.sql.extensions` entry point: the SQL functions plus the
-  * engine optimizer rules ([[graft.expressions.RewriteSizeOfSplit]]).
+/** `spark.sql.extensions` entry point: the SQL functions, the engine
+  * optimizer rules ([[GraftExtensions.optimizerRules]]) and
+  * [[SmallSortSinglePartition]] once more as an AQE runtime optimizer
+  * rule, which decides on materialized stages' exact bytes.
+  * [[GraftSession.build]] builds with it.
+  *
+  * The optimizer rules go in the pre-CBO batch, which runs once, after
+  * operator optimization: column pruning has narrowed the size
+  * estimates by then, and the rules run once per query instead of once
+  * per iteration of the fixed-point operator batch.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(e.injectFunction)
-    e.injectOptimizerRule(_ => graft.expressions.RewriteSizeOfSplit)
+    GraftExtensions.optimizerRules.foreach(r => e.injectPreCBORule(_ => r))
+    e.injectRuntimeOptimizerRule(_ => SmallSortSinglePartition)
   }
+}
+
+object GraftExtensions {
+  /** The engine's logical optimizer rules: injected at session build,
+    * and added to a running session by [[GraftSession.installOptimizations]]. */
+  val optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(graft.expressions.RewriteSizeOfSplit, SmallSortSinglePartition)
 }

@@ -52,6 +52,11 @@ object GraftSession {
   }
 
   def build(appName: String = "graft"): SparkSession = {
+    // getOrCreate hands back a running session as it is, without
+    // applying the extensions below
+    val running = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .exists(!_.sparkContext.isStopped)
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
       .appName(appName)
@@ -85,9 +90,10 @@ object GraftSession {
       // Per-JVM, transfers to executor JVMs unchanged.
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config(checkpointFs._1, checkpointFs._2)
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    installOptimizations(spark)
+    if (running) installOptimizations(spark)
     spark
   }
 
@@ -119,12 +125,14 @@ object GraftSession {
       .foreach(spark.catalog.dropTempView(_))
   }
 
-  /** Engine optimizer rules for a live session (the
-    * `spark.sql.extensions=graft.GraftExtensions` path installs the
-    * same set at build time). Idempotent.
+  /** Engine optimizer rules for a session that already runs (the
+    * [[GraftExtensions]] path installs the same list at build time).
+    * A running session's AQE runtime rules are fixed, so here
+    * [[SmallSortSinglePartition]] decides on static estimates only.
+    * Idempotent.
     */
   def installOptimizations(spark: SparkSession): Unit = {
-    val rules = Seq(graft.expressions.RewriteSizeOfSplit)
+    val rules = GraftExtensions.optimizerRules
     val current = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
       current ++ rules.filterNot(current.contains)

@@ -3,7 +3,6 @@ package graft
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -35,24 +34,8 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** Spark jobs started by `body` on this thread. */
-  private def jobsIn[T](body: => T): (Int, T) = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "TablesSpec")
-      val out = try body finally sc.clearJobGroup()
-      org.apache.spark.graft.TestBus.drain(sc)
-      (n.get(), out)
-    } finally sc.removeSparkListener(l)
-  }
+  private def jobsIn[T](body: => T): (Int, T) =
+    org.apache.spark.graft.Jobs.counted(spark.sparkContext)(body)
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSeq.sortBy(_.toString)

@@ -16,6 +16,8 @@ object TestSpark {
       // the engine's checkpoint I/O binding, so suites run the
       // production path
       .config(GraftSession.checkpointFs._1, GraftSession.checkpointFs._2)
+      // the engine's optimizer rules, as GraftSession.build installs them
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
