@@ -60,7 +60,8 @@ object GraftFunctions {
 }
 
 /** `spark.sql.extensions` entry point: the SQL functions, the engine
-  * optimizer rules ([[GraftExtensions.optimizerRules]]) and
+  * optimizer rules ([[GraftExtensions.optimizerRules]], among them
+  * [[SmallPlanSinglePartition]] and [[SmallSortSinglePartition]]) and
   * [[SmallSortSinglePartition]] once more as an AQE runtime optimizer
   * rule, which decides on materialized stages' exact bytes.
   * [[GraftSession.build]] builds with it.
@@ -82,5 +83,6 @@ object GraftExtensions {
   /** The engine's logical optimizer rules: injected at session build,
     * and added to a running session by [[GraftSession.installOptimizations]]. */
   val optimizerRules: Seq[Rule[LogicalPlan]] =
-    Seq(graft.expressions.RewriteSizeOfSplit, SmallSortSinglePartition)
+    Seq(graft.expressions.RewriteSizeOfSplit, SmallPlanSinglePartition,
+      SmallSortSinglePartition)
 }

@@ -119,10 +119,12 @@ object GraftSession {
     // harness session. Rows are monitor-card-sized today (no measured
     // cost), but the leak is unbounded with registry growth; every
     // sink is consumed within its own query's window, so reaping
-    // between queries is safe.
-    spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_stream_"))
-      .foreach(spark.catalog.dropTempView(_))
+    // between queries is safe. The sinks are local temp views, listed
+    // from catalog metadata: `catalog.listTables()` planned and ran
+    // SHOW TABLES, 494–549 ms per traced graftbench olap pass against
+    // 1–2 ms now.
+    spark.sessionState.catalog.listLocalTempViews("graft_stream_*")
+      .foreach(v => spark.catalog.dropTempView(v.table))
   }
 
   /** Engine optimizer rules for a session that already runs (the

@@ -2,6 +2,8 @@ package graft.tools
 
 import graft.GraftSession
 import graft.queries.{Registry, StreamingQueries}
+import org.apache.spark.graft.Jobs
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
 
 /** Prints `explain("formatted")` for the named queries, resolving
   * s-queries to their un-executed audit-mode lineage (the batch-planned
@@ -13,9 +15,12 @@ import graft.queries.{Registry, StreamingQueries}
   * prints a default audit set: scan pruning (`ReadSchema`), predicate
   * pushdown (`PushedFilters`), join strategy and whole-stage-codegen
   * coverage across the query families.
+  * With `--executed` each final plan is followed by a line
+  * `stages=S jobs=J`: the query stages in the final plan and the Spark
+  * jobs its run started.
   * Run: sbt "runMain graft.tools.PlanDump [--executed] [sfDir] [query ...]"
   */
-object PlanDump {
+object PlanDump extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     // --executed: run the query (executeCollect) and print the FINAL
     // adaptive plan instead of the static one — the only view that
@@ -45,8 +50,11 @@ object PlanDump {
         val df = Registry.queries(name)(spark, sfDir)
         if (executed) {
           val qe = df.queryExecution
-          qe.executedPlan.executeCollect()
+          val (jobs, _) =
+            Jobs.counted(spark.sparkContext)(qe.executedPlan.executeCollect())
           println(qe.executedPlan.toString)
+          val stages = collect(qe.executedPlan) { case s: QueryStageExec => s }
+          println(s"stages=${stages.size} jobs=$jobs")
           graft.GraftSession.dropAllBlocks(spark)
         } else df.explain("formatted")
       }

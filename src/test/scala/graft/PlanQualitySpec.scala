@@ -30,8 +30,12 @@ class PlanQualitySpec extends AnyFunSuite {
     */
   private def planOf(name: String,
       df: org.apache.spark.sql.DataFrame): (String, Int, Seq[Long]) = {
+    // the single-partition size gate lowered: a micro-batch runs with
+    // AQE off, where SmallPlanSinglePartition never fires, so the audit
+    // frame keeps the join strategies its stream plans at scale
     GraftSession.withConf(spark,
-        "spark.sql.streaming.unsupportedOperationCheck" -> "false") {
+        "spark.sql.streaming.unsupportedOperationCheck" -> "false",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1024") {
       try {
         val qe = df.queryExecution
         val partitionlessWindows = qe.optimizedPlan.collect {

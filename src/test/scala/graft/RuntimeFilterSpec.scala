@@ -18,6 +18,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class RuntimeFilterSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** Plans as at cluster scale: with the single-partition size gate
+    * lowered, [[SmallPlanSinglePartition]] leaves the sf0.01 join to the
+    * planner's own strategy choice instead of one `coalesce(1)`
+    * partition. */
+  private def atScale[T](body: => T): T = GraftSession.withConf(spark,
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1024")(body)
+
   private def selectiveDimJoin() = {
     val t = Tables(spark, "/root/testdata/sf0.01")
     t.lineitem.join(t.part.filter(col("p_size") === 1),
@@ -31,7 +38,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
   }
 
   test("local regime: the selective dim broadcasts (no bloom needed)") {
-    val physical = selectiveDimJoin().queryExecution.executedPlan.toString
+    val physical = atScale(selectiveDimJoin().queryExecution.executedPlan.toString)
     assert(physical.contains("BroadcastHashJoin"),
       s"expected the dim side to broadcast locally:\n$physical")
     assert(!physical.contains("might_contain"),
@@ -39,6 +46,10 @@ class RuntimeFilterSpec extends AnyFunSuite {
   }
 
   test("shuffle-join regime: a bloom filter is injected on the fact side") {
+    atScale(shuffleJoinRegime())
+  }
+
+  private def shuffleJoinRegime(): Unit = {
     // simulate the fact⋈fact planner choice (no broadcast candidates)
     // and a fact scan big enough to be worth filtering; restore the
     // session conf afterwards — TestSpark is shared

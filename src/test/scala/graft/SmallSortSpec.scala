@@ -46,8 +46,17 @@ class SmallSortSpec extends AnyFunSuite with BeforeAndAfterAll
     p
   }
 
+  /** [[SmallPlanSinglePartition]] would plan these small inputs with no
+    * exchange at all ([[SmallPlanSpec]]); it is off here, so each test
+    * sees the sort rule alone. */
+  private val planRuleOff =
+    "spark.sql.optimizer.excludedRules" -> SmallPlanSinglePartition.ruleName
+  override def withFixture(test: NoArgTest) =
+    GraftSession.withConf(spark, planRuleOff)(super.withFixture(test))
+
   private val ruleOff = Seq(
-    "spark.sql.optimizer.excludedRules" -> SmallSortSinglePartition.ruleName,
+    "spark.sql.optimizer.excludedRules" ->
+      s"${SmallPlanSinglePartition.ruleName},${SmallSortSinglePartition.ruleName}",
     "spark.sql.adaptive.optimizer.excludedRules" -> SmallSortSinglePartition.ruleName)
 
   /** Partitionings of every shuffle in the executed plan, AQE stages
