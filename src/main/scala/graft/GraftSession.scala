@@ -37,6 +37,37 @@ object GraftSession {
   val checkpointFs: (String, String) =
     "fs.AbstractFileSystem.file.impl" -> classOf[LocalCheckpointFs].getName
 
+  /** Settings every graft session carries, whatever its master and
+    * core count: the one list [[build]] and the test session share.
+    */
+  val fixedSettings: Seq[(String, String)] = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false",
+    // codegen source-text LRU: Spark's default 100 entries thrashes
+    // under this engine's workload — one CC query alone compiles
+    // ~130 distinct stage sources, so EVERY execution recompiled
+    // ~everything (docs/PLANS.md "Round 17: CC codegen-cache fix":
+    // n58 129/129/130 Janino compiles across back-to-back runs at 100;
+    // 96/0/4 at 4096 — the sources repeat, the cache was just too
+    // small). 4096 holds the full sweep's working set; the cost is
+    // retained generated-class metadata (~tens of KB each), nothing
+    // next to the 5–7 s/run of concurrent JIT the misses burned.
+    // Same lever per executor JVM on a cluster.
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    // drop the per-plan stage id from generated class names
+    // (default true, debugging aid only — SPARK-23032): with the id
+    // baked in, two textually identical stages at different plan
+    // positions can NEVER share a codegen-cache entry, so every CC
+    // round / repeated pipeline fragment recompiled per position.
+    // docs/PLANS.md "Round 18: CC codegen class-name sharing": n58
+    // first-touch Janino compiles 146 → 130 and first-touch wall
+    // 25.3 → 20.0 s in the same regime; back-to-back re-execution
+    // compiles 4 → 0 (the
+    // residual misses were positional aliases of cached stages).
+    // Per-JVM, transfers to executor JVMs unchanged.
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    checkpointFs)
+
   /** Runs `body` with each `key -> value` set on the session, then puts
     * back what was there before (the prior value, or unset), also when
     * `body` throws. The one save/restore of session settings. */
@@ -64,32 +95,7 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // codegen source-text LRU: Spark's default 100 entries thrashes
-      // under this engine's workload — one CC query alone compiles
-      // ~130 distinct stage sources, so EVERY execution recompiled
-      // ~everything (docs/PLANS.md "Round 17: CC codegen-cache fix":
-      // n58 129/129/130 Janino compiles across back-to-back runs at 100;
-      // 96/0/4 at 4096 — the sources repeat, the cache was just too
-      // small). 4096 holds the full sweep's working set; the cost is
-      // retained generated-class metadata (~tens of KB each), nothing
-      // next to the 5–7 s/run of concurrent JIT the misses burned.
-      // Same lever per executor JVM on a cluster.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // drop the per-plan stage id from generated class names
-      // (default true, debugging aid only — SPARK-23032): with the id
-      // baked in, two textually identical stages at different plan
-      // positions can NEVER share a codegen-cache entry, so every CC
-      // round / repeated pipeline fragment recompiled per position.
-      // docs/PLANS.md "Round 18: CC codegen class-name sharing": n58
-      // first-touch Janino compiles 146 → 130 and first-touch wall
-      // 25.3 → 20.0 s in the same regime; back-to-back re-execution
-      // compiles 4 → 0 (the
-      // residual misses were positional aliases of cached stages).
-      // Per-JVM, transfers to executor JVMs unchanged.
-      .config("spark.sql.codegen.useIdInClassName", "false")
-      .config(checkpointFs._1, checkpointFs._2)
+      .config(fixedSettings.toMap)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

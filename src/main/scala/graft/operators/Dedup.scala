@@ -226,9 +226,17 @@ object Dedup {
   /** [[jaccardPairs]] over a PREPARED (and ideally persisted) shingle
     * table — lets compositions like [[methodAgreement]] share one
     * shingle scan across several pair generators.
+    *
+    * Limit: the candidate self-join puts every prefix row of one
+    * shingle in one task, so a prefix shingle shared by f documents
+    * costs f² candidate pairs there, and AQE's skew split cannot divide
+    * a single join key. A dup-heavy corpus (near-identical documents
+    * have near-identical prefixes) hits this; the bench corpora do not
+    * (the largest shingle df at sf0.1 is 25). A fix would select a
+    * split from the observed `df`, which the prefix rows already carry.
     */
-  private[graft] def jaccardPairsOn(tok: DataFrame, threshold: Double,
-      saltThreshold: Int = saltDf): DataFrame = {
+  private[graft] def jaccardPairsOn(
+      tok: DataFrame, threshold: Double): DataFrame = {
     // carry each doc's shingle count through the explode instead of
     // re-deriving it with a second (count-over-partition) window later
     val inv = tok.select(col("doc_id"), size(col("sh")).as("n_sh"),
@@ -244,63 +252,18 @@ object Dedup {
       // a true pair.
       .filter(col("rn") <=
         floor(lit(1.0 - threshold) * col("n_sh") + lit(1e-9)).cast("int") + 1)
-    val (cachedPrefix, candidates) =
-      if (saltThreshold <= 0) {
-        // UNsalted: both join sides are the SAME persisted frame, so
-        // the sh_hash exchange is planned once and reused — the
-        // zero-overhead local shape (the salted plan's distinct sides
-        // cost two exchanges + a Generate: measured +10-17% cold on
-        // n22/n130 at sf0.1 for a salt that binds nowhere there)
-        val p = prefix.select("doc_id", "sh_hash")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (p, p.as("a")
-          .join(p.as("b"), col("a.sh_hash") === col("b.sh_hash"))
-          .filter(col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct())
-      } else {
-        // SALTED: per-key factor ⌈df/saltThreshold⌉ rides the prefix
-        // row (df is already joined in) — 1 until a shingle's document
-        // frequency crosses the threshold. A dup-heavy corpus puts the
-        // SAME common shingle in millions of prefixes (near-identical
-        // docs have near-identical df orderings) and the self-join
-        // cross-products f² pairs inside ONE task — the guide-§2.5
-        // single-giant-key skew AQE cannot split. Salting splits that
-        // key's build side ⌈df/saltThreshold⌉ ways and replicates the
-        // probe side to match: same pairs, f²/k per task (r17 verdict
-        // task 6; SaltedCandidateSpec pins salted == unsalted).
-        val p = prefix.select(col("doc_id"), col("sh_hash"),
-          greatest(lit(1L), ceil(col("df").cast("double") /
-            lit(saltThreshold.toDouble)).cast("long")).as("fac"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val aSide = p.select(col("doc_id"), col("sh_hash"),
-          pmod(xxhash64(col("doc_id")), col("fac")).as("salt"))
-        val bSide = p.select(col("doc_id"), col("sh_hash"),
-          explode(sequence(lit(0L), col("fac") - 1)).as("salt"))
-        (p, aSide.as("a")
-          .join(bSide.as("b"), col("a.sh_hash") === col("b.sh_hash") &&
-            col("a.salt") === col("b.salt"))
-          .filter(col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-          .distinct())
-      }
-    graft.DiamondCaches.register(cachedPrefix,
+    // both join sides are the SAME persisted frame, so the sh_hash
+    // exchange is planned once and reused
+    val p = prefix.select("doc_id", "sh_hash")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val candidates = p.as("a")
+      .join(p.as("b"), col("a.sh_hash") === col("b.sh_hash"))
+      .filter(col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+      .distinct()
+    graft.DiamondCaches.register(p,
       verifyJaccard(candidates, tok, threshold))
   }
-
-  /** Document-frequency threshold past which a prefix shingle's
-    * candidate self-join is salted (split ⌈df/saltThreshold⌉ ways);
-    * ≤ 0 disables the salt entirely. Pure parallelism insurance —
-    * pairs are identical either way (spec-pinned). DISABLED locally
-    * because it cannot bind at the bench SFs (measured max shingle df
-    * at sf0.1 is 25) while its plan machinery costs two exchanges
-    * where the unsalted self-join reuses one (measured +10-17% cold on
-    * n22/n130); a dup-heavy production corpus enables it sized to the
-    * per-task pair budget (a key with df = f costs ~f²/⌈f/saltDf⌉
-    * pairs per task; e.g. SPARK_GRAFT_SALT_DF=65536 bounds a task at
-    * ~4·10⁹ comparisons).
-    */
-  val saltDf: Int = sys.env.getOrElse("SPARK_GRAFT_SALT_DF", "0").toInt
 
   /** Directed CONTAINMENT pairs: |S_A ∩ S_B| / |S_A| ≥ threshold —
     * the asymmetric overlap that catches a document EMBEDDED inside a
@@ -1021,46 +984,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Verified near-dup pairs of a NEW batch against a STANDING band
-    * index — the s20 admission probe, factored here so the shipped
-    * query and the ScaleProbe index-growth row measure the identical
-    * shape (they briefly diverged by hand-copying): candidates from a
-    * (band_id, band_key) equi-join (new side is `id_a`), the standing
-    * shingle state semi-filtered to surfaced index docs BEFORE its
-    * per-doc aggregation (the read is candidate-bounded, not
-    * index-bounded), exact-Jaccard verify on candidates only.
-    *
-    * `newBands`/`newShingles`: [[portableMinHashBands]] /
-    * [[portableShingles]] of the incoming batch. `bandIndex` /
-    * `standingShingles`: the file-backed standing state (production:
-    * bucketed by band_key). Output: (id_a = new doc, id_b = index doc,
-    * jaccard) at or above `threshold`.
-    */
-  /** Bucket count for the hash-bucketed standing-state layout
-    * ([[appendBucketed]] / [[readProbedBuckets]] — the s20 band index
-    * keyed by band_key and shingle state keyed by doc_id). MUST stay
-    * fixed for the lifetime of one state directory — the bucket is
-    * `hash(key) % buckets`, so mixing counts within one directory
-    * would send probes to the wrong buckets and silently DROP
-    * candidates (at scale, changing it is an offline re-bucketing
-    * compaction, not a config flip). Env-parameterised
-    * (`SPARK_GRAFT_S20_BUCKETS`) because the right value is
-    * SCALE-DERIVED, not constant: B ≈ ⌈index bytes / target bucket
-    * bytes⌉ with a ~512 MB bucket target (guide §6 file sizing / §2
-    * scale-adaptive partitioning). At the bench SFs the whole index is
-    * a few MB, so the derivation gives B = 1 — the default — and both
-    * helpers below take a zero-overhead single-bucket fast path (no
-    * bucket-set job, no dynamic-partition write), keeping the sweep
-    * byte-comparable with r17 (measured: the full machinery at B=64
-    * costs +13 s on the 8.7 s sf0.1 sweep in per-batch constants that
-    * only amortize at scale). The multi-bucket path is pinned by
-    * BucketedStateSpec, oracle-verified at sf0.01 with B=64, and
-    * growth-gated by the stream_dedup_index_bucketed ScaleProbe row
-    * (B = 128·scale, micro-batch probe).
-    */
-  val indexBuckets: Int =
-    sys.env.getOrElse("SPARK_GRAFT_S20_BUCKETS", "1").toInt
-
   /** Deterministic key → bucket assignment (guide §2.5: derived hash,
     * never rand()): equal keys always share a bucket, so pruning to
     * the probe's buckets can never drop a matching row.
@@ -1073,10 +996,9 @@ object Dedup {
     * skips: it starts with `_` and has no `=`, so reading the state
     * root never takes it for data). The first [[appendBucketed]]
     * records it (`record`); every later append and every probe must
-    * use the same B, so a run with a different
-    * `SPARK_GRAFT_S20_BUCKETS` against an existing state dir fails
-    * here instead of probing the wrong buckets and silently dropping
-    * candidates. A state dir holding buckets but no record is refused
+    * use the same B, so a run with a different count against an
+    * existing state dir fails here instead of probing the wrong
+    * buckets and silently dropping candidates. A state dir holding buckets but no record is refused
     * for the same reason.
     */
   private def checkBucketCount(dir: String, buckets: Int,
@@ -1088,7 +1010,7 @@ object Dedup {
         java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8").trim
       require(recorded == buckets.toString,
         s"bucketed state at $dir was written with $recorded buckets, " +
-          s"this run uses $buckets (SPARK_GRAFT_S20_BUCKETS): probing " +
+          s"this run uses $buckets: probing " +
           "with another count drops candidates — re-bucket the state " +
           "or run with the recorded count")
     } else {
@@ -1111,7 +1033,7 @@ object Dedup {
     * output sizing).
     */
   def appendBucketed(df: DataFrame, dir: String, keyCol: String,
-      buckets: Int = indexBuckets): Unit = {
+      buckets: Int): Unit = {
     checkBucketCount(dir, buckets, record = true)
     if (buckets == 1)
       // single-bucket fast path: same bucket=0/ layout, none of the
@@ -1145,7 +1067,7 @@ object Dedup {
       dir: String,
       probeKeys: DataFrame,
       emptyLike: DataFrame,
-      buckets: Int = indexBuckets): DataFrame = {
+      buckets: Int): DataFrame = {
     checkBucketCount(dir, buckets, record = false)
     val key = col(probeKeys.columns.head)
     val bks: Seq[Int] =
@@ -1162,6 +1084,21 @@ object Dedup {
     else spark.read.parquet(dirs: _*).select(cols: _*)
   }
 
+  /** Verified near-dup pairs of a NEW batch against a STANDING band
+    * index — the s20 admission probe, factored here so the shipped
+    * query and the ScaleProbe index-growth row measure the identical
+    * shape (they briefly diverged by hand-copying): candidates from a
+    * (band_id, band_key) equi-join (new side is `id_a`), the standing
+    * shingle state semi-filtered to surfaced index docs BEFORE its
+    * per-doc aggregation (the read is candidate-bounded, not
+    * index-bounded), exact-Jaccard verify on candidates only.
+    *
+    * `newBands`/`newShingles`: [[portableMinHashBands]] /
+    * [[portableShingles]] of the incoming batch. `bandIndex` /
+    * `standingShingles`: the file-backed standing state (production:
+    * bucketed by band_key). Output: (id_a = new doc, id_b = index doc,
+    * jaccard) at or above `threshold`.
+    */
   def verifiedIndexDups(
       newBands: DataFrame,
       newShingles: DataFrame,

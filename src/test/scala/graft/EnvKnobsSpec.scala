@@ -16,8 +16,6 @@ class EnvKnobsSpec extends AnyFunSuite {
     "CPUS", // local[n] core count and batch shuffle partitions
     "MASTER", // Spark master URL (cluster runs)
     "SF_DIR", // data dir of the bench harnesses
-    "S20_BUCKETS", // s20 standing-index bucket count (scale-derived)
-    "SALT_DF", // hot-shingle salt threshold of the AllPairs join
     "COLD" // BenchOne: cold caches before every rep
   ).map("SPARK_GRAFT_" + _)
 

@@ -43,6 +43,22 @@ class NorthStarSpec extends AnyFunSuite {
     assert(pairs == Set((1L, 2L), (1L, 5L), (2L, 5L)))
   }
 
+  test("jaccard pairs under one giant prefix key are exactly the identical-doc pairs") {
+    // docs 0-9 are identical (shingles {7,8,9}), so every prefix key
+    // they hold has df >= 10 and the candidate join cross-products
+    // inside it; docs 10-14 share only shingle 7 and pair with nothing
+    val tok = ((0L until 10L).map(i => (i, Seq(7L, 8L, 9L))) ++
+      (10L until 15L).map(i => (i, Seq(7L, 100L + i, 200L + i))))
+      .toDF("doc_id", "sh")
+    val rows = Dedup.jaccardPairsOn(tok, 0.5)
+      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect()
+    assert(rows.length == 45)
+    assert(rows.forall(_._3 == 1.0))
+    assert(rows.map(r => (r._1, r._2)).toSet == (for {
+      a <- 0L until 10L; b <- (a + 1) until 10L
+    } yield (a, b)).toSet)
+  }
+
   test("minhash LSH pairs == exact jaccard pairs on the corpus") {
     val exact = Dedup.jaccardPairs(corpus, 3, 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet

@@ -11,11 +11,9 @@ object TestSpark {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the engine's checkpoint I/O binding, so suites run the
-      // production path
-      .config(GraftSession.checkpointFs._1, GraftSession.checkpointFs._2)
+      // the engine's fixed settings (checkpoint I/O binding and codegen
+      // constants included), so suites run the production path
+      .config(GraftSession.fixedSettings.toMap)
       // the engine's optimizer rules, as GraftSession.build installs them
       .withExtensions(new GraftExtensions)
       .getOrCreate()
